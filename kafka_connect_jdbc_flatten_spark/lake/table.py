@@ -9,18 +9,25 @@ guarantees — it is deliberately shaped like Iceberg so a production
 deployment swaps it for ``df.writeTo(...)`` / ``MERGE INTO`` with no
 plan changes:
 
-* **Snapshot isolation / atomic commit** — every commit writes a new
-  immutable manifest ``_manifest/v{N}.json`` and atomically renames a
-  pointer file ``_manifest/CURRENT``.  Readers resolve CURRENT once;
-  a crash mid-commit leaves the old snapshot intact (rename is atomic
-  on POSIX; on object stores this maps to Iceberg's metadata swap).
+* **Snapshot isolation / atomic commit** — every commit publishes a
+  new immutable manifest ``_manifest/v{N}.json`` with an exclusive
+  create (``os.link``), then moves the pointer file
+  ``_manifest/CURRENT``.  The exclusive create is the commit point:
+  of two writers racing from the same base exactly one wins, the
+  other raises ``ConcurrentCommitError``.  CURRENT is a hint readers
+  roll forward over later published versions, so a crash between the
+  publish and the pointer move loses nothing (on object stores this
+  maps to Iceberg's conditional metadata swap).
 * **Hash-bucket layout** — rows are bucketed by
-  ``pmod(xxhash64(key_cols), n_buckets)`` (same idea as Iceberg's
-  ``bucket(N, conv_id)`` partition transform).  MERGE rewrites only
-  the buckets a batch touches (copy-on-write), so write amplification
-  is bounded by batch key spread, not table size.  At 100 TB you size
-  ``n_buckets`` so a bucket ≈ a few GB; skewed hot keys spread with
-  the salt column handled upstream (``operators.skew``).
+  ``pmod(xxhash64(bucket_cols), n_buckets)`` (same idea as Iceberg's
+  ``bucket(N, conv_id)`` partition transform).
+* **Merge-on-read** — MERGE writes only the batch, as a delta segment
+  (O(batch) IO per commit); ``read()`` reconciles the segments against
+  the base and ``compact()`` folds them back, rewriting only the
+  buckets the segments touch.  Deletes are delete-flagged marker rows
+  in a segment.  At 100 TB you size ``n_buckets`` so a bucket ≈ a few
+  GB; skewed hot keys spread with the salt column handled upstream
+  (``operators.skew``).
 * **Additive schema evolution** — new nullable columns append to the
   manifest schema; old files are read with the merged schema (missing
   columns → null).  Non-nullable additions without defaults are
@@ -32,8 +39,8 @@ plan changes:
   at-least-once delivery.
 
 Single-writer per table (one streaming query), like one Connect sink
-task per table set; manifests are versioned so a concurrent-commit
-race fails loudly rather than silently losing a snapshot.
+task per table set; a concurrent-commit race fails loudly rather than
+silently losing a snapshot.
 """
 
 from __future__ import annotations
@@ -56,6 +63,13 @@ SEG_COL = "__seg"
 # delta segments' on-disk bytes stay under this cap (a free upper bound
 # on winner-map rows); larger deltas take a shuffle join
 MOR_BROADCAST_DELTA_BYTES = 256 * 1024 * 1024
+
+
+def _data_files(m: dict) -> list[str]:
+    """Every data file a manifest references: base files and delta
+    segments."""
+    file_maps = [m["files"], *(seg["files"] for seg in m.get("segments", []))]
+    return [f for fm in file_maps for fl in fm.values() for f in fl]
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -88,9 +102,9 @@ class LakeTable:
         """CREATE TABLE — auto-create analogue (``DbStructure.java:107-121``).
 
         ``bucket_cols`` (default = ``key_cols``) is the hash-layout
-        key, recorded in the manifest: every bucket-pruned rewrite
-        (merge, delete) validates its scope against it, so a caller
-        can never silently read/rewrite the wrong buckets (r3 review:
+        key, recorded in the manifest: every segment write (merge,
+        delete) validates its scope against it, so a caller can never
+        silently write into the wrong buckets (r3 review:
         ``overwrite()`` bucketing by row PK while merges bucket by the
         key scope left tombstoned rows alive forever)."""
         t = cls(spark, path)
@@ -130,8 +144,16 @@ class LakeTable:
 
     # ----------------------------------------------------------- manifests
     def _current_version(self) -> int:
+        """CURRENT, rolled forward over consecutive published versions:
+        ``v{N}.json`` is the commit point, so a writer that crashed
+        after publishing but before moving CURRENT left a committed
+        snapshot that must be read (and built on) rather than wedge
+        every later commit."""
         with open(os.path.join(self._manifest_dir, "CURRENT")) as f:
-            return int(f.read().strip())
+            v = int(f.read().strip())
+        while os.path.exists(os.path.join(self._manifest_dir, f"v{v + 1}.json")):
+            v += 1
+        return v
 
     def manifest(self, version: int | None = None) -> dict:
         """Current manifest, or a PINNED historical snapshot when
@@ -151,18 +173,24 @@ class LakeTable:
         tmp = mpath + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
-        os.rename(tmp, mpath)
+        # link() never replaces an existing name (rename() would), so
+        # of two writers publishing the same version exactly one wins
+        try:
+            os.link(tmp, mpath)
+        except FileExistsError:
+            raise ConcurrentCommitError(
+                f"table {self.path} moved past v{v - 1}"
+            ) from None
+        finally:
+            os.unlink(tmp)
         cur_tmp = os.path.join(self._manifest_dir, f"CURRENT.tmp.{uuid.uuid4().hex}")
         with open(cur_tmp, "w") as f:
             f.write(str(v))
         os.rename(cur_tmp, os.path.join(self._manifest_dir, "CURRENT"))
 
     def _commit(self, base_version: int, manifest: dict) -> None:
-        """Optimistic-concurrency commit: fail if someone moved CURRENT."""
-        if self._current_version() != base_version:
-            raise ConcurrentCommitError(
-                f"table {self.path} moved past v{base_version}"
-            )
+        """Optimistic-concurrency commit of ``base_version + 1``: raises
+        ``ConcurrentCommitError`` if another writer published it."""
         manifest["version"] = base_version + 1
         manifest["snapshots"] = (manifest.get("snapshots") or [])[-99:]
         manifest["snapshots"].append(
@@ -201,7 +229,7 @@ class LakeTable:
         (partition pruning — only the touched buckets' files are
         scanned).  When merge-on-read delta segments exist they are
         reconciled here (latest segment wins per scope / per key, see
-        ``merge(strategy="mor")``).
+        ``merge``).
 
         ``version`` pins a historical snapshot (``VERSION AS OF``):
         manifests are immutable, so the read plan is identical — only
@@ -210,18 +238,7 @@ class LakeTable:
         retention raises with guidance instead of failing mid-scan."""
         m = self.manifest(version)
         if version is not None:
-            missing = [
-                f
-                for fl in m["files"].values()
-                for f in fl
-                if not os.path.exists(f)
-            ] or [
-                f
-                for seg in m.get("segments", [])
-                for fl in seg["files"].values()
-                for f in fl
-                if not os.path.exists(f)
-            ]
+            missing = [f for f in _data_files(m) if not os.path.exists(f)]
             if missing:
                 raise ValueError(
                     f"snapshot v{version} of {self.path} has been vacuumed "
@@ -229,50 +246,33 @@ class LakeTable:
                     "with vacuum(retain_last=N)"
                 )
         schema = T.StructType.fromJson(json.loads(m["schema"]))
+        bucket_field = T.StructField(BUCKET_COL, T.IntegerType(), True)
         read_schema = T.StructType(
             list(schema.fields)
-            + [
-                T.StructField(BUCKET_COL, T.IntegerType(), True),
-                T.StructField(MOR_DELETE_COL, T.BooleanType(), True),
-            ]
+            + [bucket_field, T.StructField(MOR_DELETE_COL, T.BooleanType(), True)]
         )
         segments = m.get("segments", [])
-
-        def _files(file_map: dict) -> list[str]:
-            return [
-                f
-                for b, fl in file_map.items()
-                if buckets is None or int(b) in buckets
-                for f in fl
-            ]
-
-        parts = []
-        base_files = _files(m["files"])
-        if base_files:
-            # explicit schema ⇒ old files lacking newly-evolved columns
-            # (or the MOR delete flag) read as null (additive evolution)
-            parts.append(
-                self.spark.read.schema(read_schema)
-                .parquet(*base_files)
-                .withColumn(SEG_COL, F.lit(0))
-            )
-        for i, seg in enumerate(segments):
-            fl = _files(seg["files"])
-            if fl:
-                parts.append(
-                    self.spark.read.schema(read_schema)
-                    .parquet(*fl)
-                    .withColumn(SEG_COL, F.lit(i + 1))
-                )
-        empty = self.spark.createDataFrame(
-            [],
-            T.StructType(
-                list(schema.fields)
-                + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
-            ),
-        )
+        # base files are segment 0, delta segments 1..n in commit order
+        file_maps = [m["files"], *(seg["files"] for seg in segments)]
+        file_lists = [
+            [f for b, fl in fm.items() if buckets is None or int(b) in buckets
+             for f in fl]
+            for fm in file_maps
+        ]
+        # explicit schema ⇒ files lacking newly-evolved columns, the MOR
+        # delete flag or (keys-only delete markers) the payload read as
+        # null (additive evolution)
+        parts = [
+            self.spark.read.schema(read_schema)
+            .parquet(*fl)
+            .withColumn(SEG_COL, F.lit(i))
+            for i, fl in enumerate(file_lists)
+            if fl
+        ]
         if not parts:
-            return empty
+            return self.spark.createDataFrame(
+                [], T.StructType(list(schema.fields) + [bucket_field])
+            )
         allrows = parts[0]
         for p in parts[1:]:
             allrows = allrows.unionByName(p)
@@ -374,8 +374,8 @@ class LakeTable:
 
         Scale shape + atomicity: upserts AND tombstones land as ONE
         ``lww`` MOR delta segment — the ``d`` keys become delete-
-        flagged marker rows (keys + typed nulls, the shape
-        ``delete_where_keys``' mor path writes) in the same commit.
+        flagged marker rows (keys + the diff's null images) in the
+        same commit.
         O(diff) IO with no full-table rewrite, no mixed-segment-mode
         compaction between halves, and readers never observe a
         transient upserts-applied / deletes-pending state (r4
@@ -419,7 +419,6 @@ class LakeTable:
             delete_col="__apply_del",
             batch_id=batch_id,
             writer_id=f"{writer_id}#changes",
-            strategy="mor",
         )
 
     @staticmethod
@@ -567,9 +566,9 @@ class LakeTable:
         )
 
     def _check_layout_scope(self, scope: list[str], m: dict) -> None:
-        """Bucket-pruned rewrites must hash with the table's recorded
-        layout key, or the touched-bucket probe reads the wrong files
-        and rows silently survive deletes/merges.
+        """Segment writes must hash with the table's recorded layout
+        key, or the bucket-local reconcile and the bucket-scoped
+        ``compact()`` miss rows, which silently survive deletes/merges.
 
         Manifests created before ``bucket_cols`` existed don't record
         their physical layout, and it is NOT ``key_cols``: the pre-
@@ -648,45 +647,31 @@ class LakeTable:
         batch: DataFrame,
         mode: str = "lww",
         scope_keys: list[str] | None = None,
-        seq_col: str | None = SEQ_COL,
         delete_col: str | None = None,
         batch_id: int | None = None,
         writer_id: str = "default",
-        strategy: str = "mor",
     ) -> dict:
-        """MERGE a (pre-flattened) batch into the table.
-
-        Strategies:
-
-        * ``mor`` (merge-on-read, default) — write ONLY the batch as a
-          new delta segment (O(batch) IO per commit); ``read()``
-          reconciles (newest segment wins per scope/key) and
-          ``compact()`` folds segments back into the base.  This is
-          the CDC-ingest shape (Iceberg MOR / position-delete
-          equivalent): at 10^10 events a copy-on-write that rewrites
-          every touched bucket per micro-batch is O(table·batches).
-        * ``cow`` (copy-on-write) — rewrite the touched buckets so the
-          base is always reconciled; auto-compacts first if delta
-          segments exist.  Best for read-heavy tables with rare
-          batches.
+        """MERGE a (pre-flattened) batch into the table, merge-on-read:
+        ONLY the batch is written, as a new delta segment (O(batch) IO
+        per commit — Iceberg MOR / position-delete equivalent; at 10^10
+        events a rewrite of every touched bucket per micro-batch would
+        be O(table·batches)).  No old-state read, no probe job.  Rows
+        with ``delete_col = true`` persist as delete markers in the
+        ``__mor_del`` column; ``read()`` resolves winners and
+        ``compact()`` folds the log back into the base.
 
         Modes:
 
         * ``lww`` — row-level MERGE keyed on ``key_cols``: keep the
           winning row per key; rows whose winning image has
           ``delete_col = true`` are dropped (tombstone,
-          ``BufferedRecords.java:91-103``).  Winner order differs by
-          strategy ON PURPOSE: ``cow`` reconciles eagerly on
-          ``seq_col`` alone (re-applying any prefix of the changelog
-          can never regress a key — MERGE condition ≈
-          ``src.seq >= tgt.seq``), while ``mor`` delta segments
-          reconcile on ``(commit order, seq)`` — the apply order IS
-          the authority, matching the reference's buffer-flush
-          ordering where the last flushed statement wins
-          (``BufferedRecords.java`` flush order), and ``CdcApplier``
-          reduces each batch to one image per key on ``seq`` first,
-          so segment order and seq order agree on the CDC path
-          (pinned by ``test_mor_out_of_order_seq_within_lww``).
+          ``BufferedRecords.java:91-103``).  Segments reconcile on
+          ``(commit order, seq)`` — the apply order IS the authority,
+          matching the reference's buffer-flush ordering where the last
+          flushed statement wins (``BufferedRecords.java`` flush order),
+          and ``CdcApplier`` reduces each batch to one image per key on
+          ``seq`` first, so segment order and seq order agree on the
+          CDC path (pinned by ``test_mor_out_of_order_seq_within_lww``).
         * ``replace`` — whole-image replacement, the reference's
           flatten-upsert (delete-then-insert,
           ``BufferedRecords.java:264-270, 377-415``): every existing
@@ -695,188 +680,57 @@ class LakeTable:
           Child rows of a shrunk array disappear, matching the
           1/1/1 upsert-replay golden
           (``JdbcSinkTaskTestPostgresArray.java:1708-1874``).
+        * ``append`` — insert mode: every row survives, duplicates
+          included.
+        * ``update`` — modify-only: existing rows whose ``key_cols``
+          appear in the batch take the winning image; unknown keys are
+          ignored (SQL UPDATE).
+
+        Rows are bucketed by ``scope_keys`` (default ``key_cols``),
+        which ``commit_segment`` validates against the table layout.
 
         Exactly-once: if ``batch_id`` ≤ the manifest's recorded id for
-        ``writer_id`` the merge is a no-op (foreachBatch re-delivery).
-        """
-        if strategy == "mor":
-            return self._merge_mor(
-                batch, mode, scope_keys, delete_col, batch_id, writer_id
-            )
-        if strategy != "cow":
-            raise ValueError(f"unknown merge strategy {strategy!r}")
-        if self.manifest().get("segments"):
-            self.compact()
-
-        base = self._current_version()
-        m = self.manifest()
-        if batch_id is not None and batch_id <= m["last_committed_batch_id"].get(writer_id, -1):
-            return {"skipped": True, "reason": "batch already committed"}
-
-        table_cols = [f.name for f in self.schema.fields]
-        scope = scope_keys or m["key_cols"]
-        self._check_layout_scope(scope, m)
-
-        batch = self._align(batch).withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(*[F.col(c) for c in scope]), F.lit(m["n_buckets"])).cast("int"),
-        ).persist()  # consumed by the touched-bucket probe AND the write
-        # Which buckets does this batch touch?  Tiny aggregate (≤ n_buckets
-        # rows) — the lake-format analogue of partition pruning.
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            batch.unpersist()
-            if batch_id is not None:
-                m["last_committed_batch_id"][writer_id] = batch_id
-                self._commit(base, m)
-            return {"skipped": True, "reason": "empty batch"}
-
-        old = self.read(buckets=touched)
-
-        if mode == "replace":
-            # keys present in the batch (including tombstoned scopes)
-            batch_scopes = batch.select(*scope, BUCKET_COL).distinct()
-            keep_old = old.join(batch_scopes.select(*scope), on=scope, how="left_anti")
-            inserts = batch
-            if delete_col is not None and delete_col in batch.columns:
-                inserts = inserts.filter(~F.coalesce(F.col(delete_col), F.lit(False)))
-            new_state = keep_old.select(*table_cols, BUCKET_COL).unionByName(
-                inserts.select(*table_cols, BUCKET_COL)
-            )
-        elif mode == "lww":
-            keys = m["key_cols"]
-            sc = seq_col or SEQ_COL
-            b = batch
-            if delete_col is None or delete_col not in b.columns:
-                b = b.withColumn("__is_delete", F.lit(False))
-            else:
-                b = b.withColumn(
-                    "__is_delete", F.coalesce(F.col(delete_col), F.lit(False))
-                )
-            o = old.withColumn("__is_delete", F.lit(False))
-            allrows = o.select(*table_cols, BUCKET_COL, "__is_delete").unionByName(
-                b.select(*table_cols, BUCKET_COL, "__is_delete")
-            )
-            from ..operators.lww import lww_reduce
-
-            winner = lww_reduce(allrows, keys, [sc])
-            new_state = winner.filter(~F.col("__is_delete")).drop("__is_delete")
-        elif mode == "append":
-            # insert mode: pure append, duplicates tolerated
-            new_state = old.select(*table_cols, BUCKET_COL).unionByName(
-                batch.select(*table_cols, BUCKET_COL)
-            )
-        elif mode == "update":
-            # modify-only: every OLD row whose row key appears in the
-            # batch is rewritten with the winning batch image's values —
-            # SQL UPDATE modifies EACH matching row, so duplicate base
-            # rows (earlier insert-mode history) keep their multiplicity
-            # instead of collapsing to one winner (r3 advisory); unknown
-            # keys are silently ignored (PostgreSqlDatabaseDialect
-            # update path, insert.mode=update).  Matching is on
-            # key_cols (row PK); bucketing stays on ``scope`` so the
-            # layout matches every other write path.
-            from ..operators.lww import lww_reduce_agg
-
-            keys = m["key_cols"]
-            sc = seq_col or SEQ_COL
-            winner = lww_reduce_agg(batch, keys, [sc])
-            is_del_w = (
-                F.coalesce(F.col(delete_col), F.lit(False))
-                if delete_col is not None and delete_col in batch.columns
-                else F.lit(False)
-            )
-            val_cols = [c for c in table_cols if c not in keys]
-            winner_vals = winner.select(
-                *keys,
-                is_del_w.alias("__w_del"),
-                *[F.col(c).alias(f"__u_{c}") for c in val_cols],
-            )
-            keep_old = old.join(
-                winner_vals.select(*keys), on=keys, how="left_anti"
-            )
-            # inner join on the row key preserves old-row multiplicity;
-            # a winning tombstone drops all matching rows (DELETE)
-            updated = (
-                old.join(winner_vals, on=keys, how="inner")
-                .filter(~F.col("__w_del"))
-                .select(
-                    *keys,
-                    *[F.col(f"__u_{c}").alias(c) for c in val_cols],
-                    F.col(BUCKET_COL),
-                )
-            )
-            new_state = keep_old.select(*table_cols, BUCKET_COL).unionByName(
-                updated.select(*table_cols, BUCKET_COL)
-            )
-        else:
-            raise ValueError(f"unknown merge mode {mode!r}")
-
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(new_state, commit_id)
-        batch.unpersist()
-        files = dict(m["files"])
-        for tb in touched:
-            files.pop(str(tb), None)
-        for b_, fl in new_files.items():
-            files[b_] = fl
-        m["files"] = files
-        if batch_id is not None:
-            m["last_committed_batch_id"][writer_id] = batch_id
-        self._commit(base, m)
-        return {
-            "skipped": False,
-            "touched_buckets": len(touched),
-            "version": m["version"],
-        }
-
-    def _merge_mor(
-        self,
-        batch: DataFrame,
-        mode: str,
-        scope_keys: list[str] | None,
-        delete_col: str | None,
-        batch_id: int | None,
-        writer_id: str,
-    ) -> dict:
-        """Merge-on-read commit: the batch lands as a delta segment.
-
-        No old-state read, no probe job, no table rewrite — one
-        bucketed write of the batch plus the manifest swap.  Delete
-        markers persist in the ``__mor_del`` column; ``read()``
-        resolves winners, ``compact()`` folds the log.
+        ``writer_id`` the merge is a no-op that writes no files
+        (foreachBatch re-delivery).
         """
         if mode not in ("replace", "lww", "append", "update"):
             raise ValueError(f"unknown merge mode {mode!r}")
-        base = self._current_version()
-        m = self.manifest()
-        if batch_id is not None and batch_id <= m["last_committed_batch_id"].get(writer_id, -1):
-            return {"skipped": True, "reason": "batch already committed"}
-        existing_modes = {s["mode"] for s in m.get("segments", [])}
-        if existing_modes and existing_modes != {mode}:
-            self.compact()
-            base = self._current_version()
-            m = self.manifest()
-
-        table_cols = [f.name for f in self.schema.fields]
-        scope = scope_keys or m["key_cols"]
-        self._check_layout_scope(scope, m)
-        out = self._align(batch).withColumn(
-            BUCKET_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in scope]), F.lit(m["n_buckets"])
-            ).cast("int"),
+        scope = list(scope_keys or self.key_cols)
+        is_del = (
+            F.coalesce(F.col(delete_col), F.lit(False))
+            if delete_col is not None and delete_col in batch.columns
+            else F.lit(False)
         )
-        if delete_col is not None and delete_col in batch.columns:
-            out = out.withColumn(
-                MOR_DELETE_COL, F.coalesce(F.col(delete_col), F.lit(False))
-            )
-        else:
-            out = out.withColumn(MOR_DELETE_COL, F.lit(False))
-        out = out.select(*table_cols, BUCKET_COL, MOR_DELETE_COL)
+        rows = self._align(batch).select(
+            *[f.name for f in self.schema.fields],
+            self._bucket_expr(scope).alias(BUCKET_COL),
+            is_del.alias(MOR_DELETE_COL),
+        )
+        return self._write_segment(rows, mode, scope, batch_id, writer_id)
 
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(out, commit_id)
+    def _is_committed(self, batch_id: int | None, writer_id: str, m: dict) -> bool:
+        return batch_id is not None and batch_id <= m["last_committed_batch_id"].get(
+            writer_id, -1
+        )
+
+    def _write_segment(
+        self,
+        rows: DataFrame,
+        mode: str,
+        scope: list[str],
+        batch_id: int | None,
+        writer_id: str,
+    ) -> dict:
+        """Write ``rows`` (carrying ``__bucket`` and ``__mor_del``) as
+        one delta segment and commit it; a redelivered batch is skipped
+        before any file is written."""
+        m = self.manifest()
+        if self._is_committed(batch_id, writer_id, m):
+            return {"skipped": True, "reason": "batch already committed"}
+        # refused here too, so a mismatched scope writes no files that
+        # the failing commit would leave orphaned
+        self._check_layout_scope(scope, m)
+        new_files = self._write_bucket_files(rows, uuid.uuid4().hex[:12])
         return self.commit_segment(new_files, mode, scope, batch_id, writer_id)
 
     def commit_segment(
@@ -886,14 +740,15 @@ class LakeTable:
         scope_keys: list[str],
         batch_id: int | None = None,
         writer_id: str = "default",
-        _base: int | None = None,
     ) -> dict:
         """Append already-written data files as a delta segment (the
         metadata half of a MOR commit — lets a caller write MANY
-        tables' segments in one Spark job, then commit each manifest)."""
-        base = self._current_version() if _base is None else _base
+        tables' segments in one Spark job, then commit each manifest).
+        A segment log of a different mode is compacted first, so the
+        log only ever holds one mode."""
+        base = self._current_version()
         m = self.manifest()
-        if batch_id is not None and batch_id <= m["last_committed_batch_id"].get(writer_id, -1):
+        if self._is_committed(batch_id, writer_id, m):
             return {"skipped": True, "reason": "batch already committed"}
         self._check_layout_scope(list(scope_keys), m)
         existing_modes = {s["mode"] for s in m.get("segments", [])}
@@ -925,7 +780,6 @@ class LakeTable:
         self._commit(base, m)
         return {
             "skipped": False,
-            "strategy": "mor",
             "segments": len(m["segments"]),
             "version": m["version"],
         }
@@ -974,76 +828,24 @@ class LakeTable:
         scope_keys: list[str],
         batch_id: int | None = None,
         writer_id: str = "default",
-        strategy: str = "cow",
     ) -> dict:
         """Tombstone apply: delete every row matching the key set —
         the reference wipes matching rows from all topic tables
         (``JdbcDbWriter.java:130-198``).
 
-        ``strategy="mor"`` commits a marker-only replace segment
-        (scope keys + nulls, delete-flagged — the same shape the CDC
-        apply's tombstone markers use) instead of rewriting the
-        touched buckets: O(keys) IO per delete instead of O(touched
-        buckets), the shape a wide tombstone fan-out wants at scale.
-        Falls back to copy-on-write when the schema has a non-nullable
-        non-scope column (the marker row can't be padded)."""
-        if strategy == "mor":
-            from pyspark.sql import functions as _F
-
-            del_col = "__dwk_delete"
-            batch = (
-                keys_df.select(*scope_keys)
-                .distinct()
-                .withColumn(SEQ_COL, _F.lit(None).cast("long"))
-                .withColumn(del_col, _F.lit(True))
-            )
-            try:
-                return self.merge(
-                    batch,
-                    mode="replace",
-                    scope_keys=list(scope_keys),
-                    delete_col=del_col,
-                    batch_id=batch_id,
-                    writer_id=writer_id,
-                    strategy="mor",
-                )
-            except SchemaEvolutionError:
-                pass  # non-nullable non-scope column → COW below
-        elif strategy != "cow":
-            raise ValueError(f"unknown delete strategy {strategy!r}")
-        if self.manifest().get("segments"):
-            self.compact()  # the COW rewrite below only touches base files
-        m = self.manifest()
-        base = self._current_version()
-        if batch_id is not None and batch_id <= m["last_committed_batch_id"].get(writer_id, -1):
-            return {"skipped": True, "reason": "batch already committed"}
-        table_cols = [f.name for f in self.schema.fields]
-        self._check_layout_scope(list(scope_keys), m)
-        keys_df = keys_df.select(*scope_keys).distinct().withColumn(
-            BUCKET_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in scope_keys]), F.lit(m["n_buckets"])
-            ).cast("int"),
+        Commits a replace segment of keys-only delete markers (the
+        scope keys, ``__bucket`` and ``__mor_del = true``): O(keys) IO,
+        base files untouched.  The other columns are absent from the
+        marker files and read as null under the table's explicit
+        schema, non-nullable ones included; reconcile drops marker
+        rows, so those nulls never reach a reader or ``compact()``."""
+        scope = list(scope_keys)
+        markers = keys_df.select(*scope).distinct().select(
+            *scope,
+            self._bucket_expr(scope).alias(BUCKET_COL),
+            F.lit(True).alias(MOR_DELETE_COL),
         )
-        touched = [r[0] for r in keys_df.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return {"skipped": True, "reason": "no keys"}
-        old = self.read(buckets=touched)
-        new_state = old.join(
-            keys_df.select(*scope_keys), on=scope_keys, how="left_anti"
-        ).select(*table_cols, BUCKET_COL)
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(new_state, commit_id)
-        files = dict(m["files"])
-        for tb in touched:
-            files.pop(str(tb), None)
-        for b_, fl in new_files.items():
-            files[b_] = fl
-        m["files"] = files
-        if batch_id is not None:
-            m["last_committed_batch_id"][writer_id] = batch_id
-        self._commit(base, m)
-        return {"skipped": False, "touched_buckets": len(touched)}
+        return self._write_segment(markers, "replace", scope, batch_id, writer_id)
 
     # ----------------------------------------------------------- evolution
     def evolve_schema(self, new_schema: T.StructType) -> list[str]:
@@ -1090,11 +892,7 @@ class LakeTable:
                 m = self.manifest(v)
             except ValueError:
                 continue
-            live |= {os.path.abspath(p) for fl in m["files"].values() for p in fl}
-            for seg in m.get("segments", []):
-                live |= {
-                    os.path.abspath(p) for fl in seg["files"].values() for p in fl
-                }
+            live |= {os.path.abspath(p) for p in _data_files(m)}
         removed = 0
         for root, _dirs, fs in os.walk(self._data_dir):
             for f in fs:
@@ -1123,12 +921,7 @@ def gc_unreferenced(roots: list[str], tables: list["LakeTable"]) -> int:
     """
     live: set[str] = set()
     for t in tables:
-        m = t.manifest()
-        live |= {os.path.abspath(p) for fl in m["files"].values() for p in fl}
-        for seg in m.get("segments", []):
-            live |= {
-                os.path.abspath(p) for fl in seg["files"].values() for p in fl
-            }
+        live |= {os.path.abspath(p) for p in _data_files(t.manifest())}
     removed = 0
     for root in roots:
         if not os.path.isdir(root):

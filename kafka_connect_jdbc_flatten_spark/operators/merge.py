@@ -35,8 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pyspark.errors.exceptions.captured import AnalysisException
-
 from ..lake.table import BUCKET_COL, MOR_DELETE_COL, SEQ_COL, LakeTable
 from ..plans.flatten_plan import ARRAY, MAP, FlattenPlan, TableSpec
 from .explode import flatten_table, has_rows_expr
@@ -51,7 +49,7 @@ def _union_compatible(plan: FlattenPlan) -> bool:
     (int ∪ long → long) and the widened parquet would be durably
     committed as a segment a later ``read()`` (explicit narrower
     schema) cannot read — so differing types must route to per-table
-    merges BEFORE writing, not via a caught AnalysisException."""
+    merges BEFORE writing."""
     types: dict[str, object] = {}
     for spec in plan.tables:
         for f in spec.spark_schema.fields:
@@ -116,7 +114,6 @@ class CdcApplier:
         self,
         changelog: DataFrame,
         batch_id: int | None = None,
-        strategy: str = "mor",
         writer_suffix: str = "",
         n_rows_hint: int | None = None,
     ) -> dict:
@@ -157,7 +154,7 @@ class CdcApplier:
             # upsert/update paths).  One appended row per flattened
             # record = the reference's insert-count validation shape
             # (BufferedRecords.java:228-239).
-            return self._apply_insert(changelog, batch_id, strategy, writer_suffix)
+            return self._apply_insert(changelog, batch_id, writer_suffix)
         if imode not in ("upsert", "update"):
             raise ValueError(f"unknown insert_mode {imode!r}")
         # one image per key per batch: LWW on the binlog order.
@@ -183,46 +180,36 @@ class CdcApplier:
         # per-table scans don't each re-read the full winner cache
         deletes = reduced.filter(is_del).persist()
 
-        if imode == "update":
-            # insert.mode=update: modify-only, unknown keys silently
-            # ignored (SQL UPDATE semantics,
-            # PostgreSqlDatabaseDialect update path)
-            stats = self._apply_update(
-                upserts, deletes, batch_id, strategy, writer_suffix
-            )
+        try:
+            if imode == "update":
+                # insert.mode=update: modify-only, unknown keys silently
+                # ignored (SQL UPDATE semantics,
+                # PostgreSqlDatabaseDialect update path)
+                stats = self._apply_update(upserts, deletes, batch_id, writer_suffix)
+            elif self._union_ok:
+                stats = self._apply_mor_union(upserts, deletes, batch_id, writer_suffix)
+            else:
+                stats = self._apply_per_table(upserts, deletes, batch_id, writer_suffix)
+            # the foreign fan-out runs only after this plan's tables
+            # committed; it isolates its own per-table failures
             stats.update(
                 self._delete_from_foreign_tables(deletes, batch_id, writer_suffix)
             )
+            return stats
+        finally:
             deletes.unpersist()
             reduced.unpersist()
-            return stats
 
-        stats: dict[str, dict] = {}
-        if strategy == "mor" and self._union_ok:
-            applied = False
-            try:
-                stats = self._apply_mor_union(
-                    upserts, deletes, batch_id, writer_suffix
-                )
-                applied = True
-            except AnalysisException:
-                # backstop only — _union_ok already routed same-name/
-                # different-type plans to the per-table path below.
-                # The backstop covers ONLY the union write/commit: the
-                # foreign-delete fan-out runs OUTSIDE it (r3 review —
-                # an exception there after the segments durably
-                # committed would otherwise trigger a full, duplicate
-                # per-table re-apply).
-                pass
-            if applied:
-                stats.update(
-                    self._delete_from_foreign_tables(
-                        deletes, batch_id, writer_suffix
-                    )
-                )
-                deletes.unpersist()
-                reduced.unpersist()
-                return stats
+    def _apply_per_table(
+        self,
+        upserts: DataFrame,
+        deletes: DataFrame,
+        batch_id: int | None,
+        writer_suffix: str,
+    ) -> dict:
+        """One ``replace`` merge per table — the path for plans whose
+        tables cannot share one union write (``_union_compatible``)."""
+        from concurrent.futures import ThreadPoolExecutor
 
         def _merge_one(spec: TableSpec) -> tuple[str, dict]:
             table = self.tables[spec.table_name]
@@ -235,7 +222,6 @@ class CdcApplier:
                 delete_col=DELETE_COL,
                 batch_id=batch_id,
                 writer_id=spec.table_name + writer_suffix,
-                strategy=strategy,
             )
 
         # Target tables are independent — submit their MERGEs as
@@ -243,17 +229,8 @@ class CdcApplier:
         # but applies serially, FlattenTransformation.java:89-91 /
         # JdbcDbWriter.java:217-223; on Spark the scheduler interleaves
         # the stages, hiding each table's fixed job latency).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(plan.tables)) as pool:
-            for name, st in pool.map(_merge_one, plan.tables):
-                stats[name] = st
-        stats.update(
-            self._delete_from_foreign_tables(deletes, batch_id, writer_suffix)
-        )
-        deletes.unpersist()
-        reduced.unpersist()
-        return stats
+        with ThreadPoolExecutor(max_workers=len(self.plan.tables)) as pool:
+            return dict(pool.map(_merge_one, self.plan.tables))
 
     def _delete_from_foreign_tables(
         self, deletes: DataFrame, batch_id: int | None, writer_suffix: str
@@ -267,8 +244,8 @@ class CdcApplier:
         warehouse catalog by topic prefix; the delete key is the
         key-derived PK, which propagates to every table of the topic
         with the same names (key-PK propagation) and is also every
-        table's bucketing scope under CDC apply, so the bucket-pruned
-        ``delete_where_keys`` rewrite is layout-consistent."""
+        table's bucketing scope under CDC apply, so the marker segment
+        ``delete_where_keys`` commits is layout-consistent."""
         if not self.plan.config.delete_enabled:
             return {}
         from ..sources.monitor import TableMonitor
@@ -335,13 +312,10 @@ class CdcApplier:
             # stats instead; the table's own ledger wasn't stamped, so
             # a later batch's tombstones (or an operator fix) retry it.
             try:
-                # MOR marker segment: O(keys) per foreign table instead
-                # of a copy-on-write bucket rewrite — the fan-out can
-                # touch every drifted fingerprint's tables per batch,
-                # which at scale made tombstones O(tables × buckets)
+                # a keys-only marker segment: O(keys) per foreign table
                 stats[name] = table.delete_where_keys(
                     keys_df, scope, batch_id=batch_id,
-                    writer_id=name + writer_suffix, strategy="mor",
+                    writer_id=name + writer_suffix,
                 )
             except Exception as e:  # noqa: BLE001 — isolate per table
                 stats[name] = {"error": f"{type(e).__name__}: {e}"}
@@ -351,7 +325,6 @@ class CdcApplier:
         self,
         changelog: DataFrame,
         batch_id: int | None,
-        strategy: str,
         writer_suffix: str,
     ) -> dict:
         """insert.mode=insert: flatten every non-tombstone envelope and
@@ -380,13 +353,10 @@ class CdcApplier:
                 scope_keys=scope,
                 batch_id=batch_id,
                 writer_id=spec.table_name + writer_suffix,
-                strategy=strategy,
             )
 
-        stats: dict[str, dict] = {}
         with ThreadPoolExecutor(max_workers=len(self.plan.tables)) as pool:
-            for name, st in pool.map(_append_one, self.plan.tables):
-                stats[name] = st
+            stats = dict(pool.map(_append_one, self.plan.tables))
         inserts.unpersist()
         return stats
 
@@ -395,7 +365,6 @@ class CdcApplier:
         upserts: DataFrame,
         deletes: DataFrame,
         batch_id: int | None,
-        strategy: str,
         writer_suffix: str,
     ) -> dict:
         """insert.mode=update: row-level modify of EXISTING keys only;
@@ -414,16 +383,15 @@ class CdcApplier:
             )
             # bucket on the key scope like every other write path —
             # row-level matching on key_cols happens inside the merge
+            scope = list(spec.key_merge_keys) or list(spec.merge_keys)
             st = table.merge(
                 flat,
                 mode="update",
-                scope_keys=list(spec.key_merge_keys) or list(spec.merge_keys),
+                scope_keys=scope,
                 batch_id=batch_id,
                 writer_id=spec.table_name + writer_suffix,
-                strategy=strategy,
             )
             if has_deletes:
-                scope = list(spec.key_merge_keys) or list(spec.merge_keys)
                 st_del = table.delete_where_keys(
                     deletes.select(*self._key_exprs(spec)),
                     scope_keys=scope,
@@ -433,11 +401,8 @@ class CdcApplier:
                 st = {"update": st, "delete": st_del}
             return spec.table_name, st
 
-        stats: dict[str, dict] = {}
         with ThreadPoolExecutor(max_workers=len(plan.tables)) as pool:
-            for name, st in pool.map(_update_one, plan.tables):
-                stats[name] = st
-        return stats
+            return dict(pool.map(_update_one, plan.tables))
 
     def _batch_rows(self, spec: TableSpec, upserts: DataFrame, deletes: DataFrame) -> DataFrame:
         """Flattened upsert rows ∪ scope marker rows for one table.

@@ -25,16 +25,20 @@ reference's per-partition offset map.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..lake.table import SEQ_COL, LakeTable
+from ..operators.lww import lww_reduce_auto
 from ..operators.merge import CdcApplier
-from ..plans.flatten_plan import FlattenPlan
-from ..sources.changelog import CHANGELOG_SCHEMA
+from ..plans.flatten_plan import FlattenPlan, PlanCache
+from ..sources.changelog import CHANGELOG_SCHEMA, schema_carrying_envelope_schema
 
 
 class StreamingIngest:
@@ -50,13 +54,22 @@ class StreamingIngest:
         schema=None,
         compact_every: int | None = 16,
     ):
+        self._init_stream(
+            spark, changelog_dir, warehouse, checkpoint_dir,
+            schema or CHANGELOG_SCHEMA, max_files_per_trigger, compact_every,
+        )
+        self.applier = CdcApplier(spark, warehouse, plan, n_buckets)
+
+    def _init_stream(self, spark, changelog_dir, warehouse, checkpoint_dir,
+                     schema, max_files_per_trigger, compact_every) -> None:
+        """State every streaming ingest shares: source, checkpoint,
+        maintenance cadence, lineage log."""
         self.spark = spark
         self.changelog_dir = changelog_dir
         self.warehouse = warehouse
         self.checkpoint_dir = checkpoint_dir
-        self.schema = schema or CHANGELOG_SCHEMA
+        self.schema = schema
         self.max_files_per_trigger = max_files_per_trigger
-        self.applier = CdcApplier(spark, warehouse, plan, n_buckets)
         # bound merge-on-read amplification: fold delta segments back
         # into the base every `compact_every` micro-batches (Iceberg's
         # rewrite_data_files maintenance, inline for a single writer)
@@ -64,6 +77,13 @@ class StreamingIngest:
         self.lineage_dir = os.path.join(warehouse, "_lineage")
         os.makedirs(self.lineage_dir, exist_ok=True)
         self.batch_stats: list[dict] = []
+
+    def _maintain(self, batch_id: int, appliers) -> None:
+        """Every ``compact_every`` micro-batches: compact + vacuum,
+        including the shared ``_commits/`` segment dir."""
+        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
+            for applier in appliers:
+                applier.maintain()
 
     # ------------------------------------------------------------------
     def _lineage_rows(self, batch_df: DataFrame) -> list:
@@ -114,9 +134,7 @@ class StreamingIngest:
             batch_id=batch_id,
             n_rows_hint=sum(r["rows"] for r in lineage_rows),
         )
-        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-            # compact + vacuum incl. the shared _commits/ segment dir
-            self.applier.maintain()
+        self._maintain(batch_id, [self.applier])
         self._record_lineage(batch_id, lineage_rows, stats, t0)
 
     # ------------------------------------------------------------------
@@ -187,37 +205,23 @@ class SchemaDriftIngest(StreamingIngest):
         max_files_per_trigger: int | None = None,
         compact_every: int | None = 16,
     ):
-        from ..plans.flatten_plan import PlanCache
-        from ..sources.changelog import schema_carrying_envelope_schema
-
-        self.spark = spark
-        self.changelog_dir = changelog_dir
-        self.warehouse = warehouse
-        self.checkpoint_dir = checkpoint_dir
+        self._init_stream(
+            spark, changelog_dir, warehouse, checkpoint_dir,
+            schema_carrying_envelope_schema(key_schema),
+            max_files_per_trigger, compact_every,
+        )
         self.cfg = cfg
         self.key_schema = key_schema
         self.value_record_name = value_record_name
         self.key_record_name = key_record_name
         self.n_buckets = n_buckets
-        self.max_files_per_trigger = max_files_per_trigger
-        self.compact_every = compact_every
-        self.schema = schema_carrying_envelope_schema(key_schema)
         # plan cache capacity = flatten.instruction_cache_size parity
         self.plan_cache = PlanCache(capacity=cfg.instruction_cache_size)
         self.appliers: dict[str, CdcApplier] = {}
         self.evolutions: list[dict] = []  # audit log of ALTER ADDs
-        self.lineage_dir = os.path.join(warehouse, "_lineage")
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        self.batch_stats: list[dict] = []
 
     # ------------------------------------------------------------------
     def _applier_for(self, schema_json: str) -> tuple[CdcApplier, str]:
-        import hashlib
-
-        from pyspark.sql import types as T
-
-        from ..lake.table import SEQ_COL, LakeTable
-
         suffix = "@" + hashlib.md5(schema_json.encode()).hexdigest()[:8]
         ap = self.appliers.get(schema_json)
         if ap is not None:
@@ -261,10 +265,6 @@ class SchemaDriftIngest(StreamingIngest):
         return ap, suffix
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import types as T
-
-        from ..operators.lww import lww_reduce_auto
-
         t0 = time.time()
         lineage_rows = self._lineage_rows(batch_df)
         # one winner per key FIRST, across ALL schemas (the value is
@@ -303,9 +303,7 @@ class SchemaDriftIngest(StreamingIngest):
             for tname, tstats in st.items():
                 stats.setdefault(tname, []).append(tstats)
         reduced.unpersist()
-        if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-            for applier in self.appliers.values():
-                applier.maintain()
+        self._maintain(batch_id, self.appliers.values())
         self._record_lineage(
             batch_id, lineage_rows, stats, t0, schemas=len(groups)
         )

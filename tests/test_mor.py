@@ -72,17 +72,21 @@ def test_mor_replace_scope_delete(spark, tmp_path):
     assert state(t) == [(1, "a0x")]
 
 
-def test_mor_exactly_once_and_cow_interop(spark, tmp_path):
+def test_mor_exactly_once(spark, tmp_path):
+    import glob
+
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=2)
     b = mk(spark, [(1, "a", 1)])
     t.merge(b, mode="lww", batch_id=0)
     v = t.manifest()["version"]
+    files = glob.glob(str(tmp_path / "t" / "data" / "**" / "*.parquet"), recursive=True)
     assert t.merge(b, mode="lww", batch_id=0)["skipped"]
     assert t.manifest()["version"] == v
-    # a cow merge auto-compacts the pending segments first
-    t.merge(mk(spark, [(2, "b", 2)]), mode="lww", batch_id=1, strategy="cow")
-    assert t.manifest()["segments"] == []
-    assert state(t) == [(1, "a"), (2, "b")]
+    # the redelivery is skipped before the write: no new data files
+    assert glob.glob(
+        str(tmp_path / "t" / "data" / "**" / "*.parquet"), recursive=True
+    ) == files
+    assert state(t) == [(1, "a")]
 
 
 def test_schema_evolution_with_segments(spark, tmp_path):
@@ -130,7 +134,7 @@ def test_union_write_commit_dir_layout(spark, tmp_path):
     stats = ap.apply_batch(
         spark.createDataFrame(rows, CHANGELOG_SCHEMA), batch_id=0
     )
-    assert all(st.get("strategy") == "mor" for st in stats.values()), stats
+    assert all(not st["skipped"] for st in stats.values()), stats
     commits = os.listdir(os.path.join(wh, "_commits"))
     assert len(commits) == 1  # ONE write job for both tables
     for name, table in ap.tables.items():
@@ -360,11 +364,20 @@ def test_overwrite_bootstrap_respects_bucket_layout(spark, tmp_path):
     )
     rows = [(f"c{i}", j, 1) for i in range(20) for j in range(2)]
     t.overwrite(spark.createDataFrame(rows, schema), batch_id=0)
+    base_files = dict(t.manifest()["files"])
     keys = spark.createDataFrame([("c3",), ("c7",)], "conv_id string")
-    t.delete_where_keys(keys, ["conv_id"], batch_id=1)
+    # the non-nullable turn_idx is absent from the keys-only markers
+    st = t.delete_where_keys(keys, ["conv_id"], batch_id=1)
+    assert not st["skipped"], st
+    m = t.manifest()
+    assert len(m["segments"]) == 1 and m["files"] == base_files
     left = {r.conv_id for r in t.read().collect()}
     assert "c3" not in left and "c7" not in left
     assert len(left) == 18
+    t.compact()
+    after = t.read().collect()
+    assert {r.conv_id for r in after} == left and len(after) == 36
+    assert all(r.turn_idx is not None for r in after)
     # a rewrite scoped by a different hash key is refused loudly
     with pytest.raises(ValueError, match="bucket layout"):
         t.delete_where_keys(
@@ -487,8 +500,7 @@ def test_commit_segment_mixed_mode_keeps_layout_backfill(spark, tmp_path):
         bucket_cols=["k"],
     )
     # pending delta segment of a DIFFERENT mode than the next commit
-    t.merge(mk2([(1, 0, "a", 1)]), mode="lww", scope_keys=["k"],
-            strategy="mor", batch_id=0)
+    t.merge(mk2([(1, 0, "a", 1)]), mode="lww", scope_keys=["k"], batch_id=0)
     # strip bucket_cols in place, like a manifest written by old code
     v = t._current_version()
     mp = os.path.join(t._manifest_dir, f"v{v}.json")
@@ -520,18 +532,17 @@ def test_commit_segment_mixed_mode_keeps_layout_backfill(spark, tmp_path):
 
 
 def test_delete_where_keys_mor_marker_segment(spark, tmp_path):
-    """strategy='mor' tombstone apply: commits a marker-only replace
-    segment (O(keys) IO) instead of rewriting touched buckets; result
-    equals the COW path, survives compaction, and auto-compacts a
-    mismatched-mode segment log first."""
+    """Tombstone apply commits a marker-only replace segment (O(keys)
+    IO) instead of rewriting touched buckets; the result survives
+    compaction, and a mismatched-mode segment log is compacted first."""
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=4)
     t.merge(mk(spark, [(1, "a", 1), (2, "b", 1), (3, "c", 1)]),
             mode="replace", scope_keys=["k"], batch_id=0)
     t.compact()
     base_files = dict(t.manifest()["files"])
     keys = spark.createDataFrame([(2,)], "k long")
-    st = t.delete_where_keys(keys, ["k"], batch_id=1, strategy="mor")
-    assert st.get("strategy") == "mor", st
+    st = t.delete_where_keys(keys, ["k"], batch_id=1)
+    assert not st["skipped"], st
     m = t.manifest()
     assert len(m["segments"]) == 1 and m["segments"][0]["mode"] == "replace"
     assert m["files"] == base_files  # base untouched — no bucket rewrite
@@ -540,13 +551,12 @@ def test_delete_where_keys_mor_marker_segment(spark, tmp_path):
     assert state(t) == [(1, "a"), (3, "c")]
     # exactly-once on redelivery
     v = t._current_version()
-    assert t.delete_where_keys(keys, ["k"], batch_id=1, strategy="mor")["skipped"]
+    assert t.delete_where_keys(keys, ["k"], batch_id=1)["skipped"]
     assert t._current_version() == v
     # a mismatched-mode log (lww) auto-compacts before the marker lands
     t.merge(mk(spark, [(4, "d", 2)]), mode="lww", batch_id=2)
     st = t.delete_where_keys(
         spark.createDataFrame([(4,)], "k long"), ["k"], batch_id=3,
-        strategy="mor",
     )
     assert not st.get("skipped"), st
     assert state(t) == [(1, "a"), (3, "c")]
@@ -601,3 +611,109 @@ def test_foreign_tombstone_fanout_commits_segments_not_rewrites(
     assert len(m["segments"]) == 1 and m["segments"][0]["mode"] == "replace"
     assert m["files"] == base_files
     assert {r.conv_id for r in foreign.read().collect()} == {"c2"}
+
+
+def test_racing_writers_one_wins_one_raises(spark, tmp_path):
+    """Two handles commit from the same base version.  Writer B passes
+    every pre-check, then writer A publishes that version first: B's
+    publish must raise instead of replacing A's snapshot, and a retry
+    of B lands on top of A."""
+    import glob
+
+    import pytest
+
+    from kafka_connect_jdbc_flatten_spark.lake.table import ConcurrentCommitError
+
+    path = str(tmp_path / "t")
+    a = LakeTable.create(spark, path, SCHEMA, ["k"], n_buckets=2)
+    b = LakeTable(spark, path)
+    base = a._current_version()
+    publish = b._write_manifest
+
+    def a_wins_first(manifest):
+        a.merge(mk(spark, [(1, "a", 1)]), mode="lww", batch_id=0, writer_id="a")
+        publish(manifest)
+
+    b._write_manifest = a_wins_first
+    with pytest.raises(ConcurrentCommitError):
+        b.merge(mk(spark, [(2, "b", 1)]), mode="lww", batch_id=0, writer_id="b")
+    b._write_manifest = publish
+    # A's snapshot survived intact; B's batch was not recorded
+    assert a._current_version() == base + 1
+    assert a.manifest()["last_committed_batch_id"] == {"a": 0}
+    assert state(a) == [(1, "a")]
+    # B's redelivery commits on top of A: no snapshot lost
+    st = b.merge(mk(spark, [(2, "b", 1)]), mode="lww", batch_id=0, writer_id="b")
+    assert st["version"] == base + 2
+    assert state(a) == [(1, "a"), (2, "b")]
+    assert not glob.glob(os.path.join(a._manifest_dir, "*.tmp.*"))
+
+
+def test_published_manifest_without_current_move_is_committed(spark, tmp_path):
+    """A crash after ``v{N+1}.json`` is published but before CURRENT
+    moves: the published version is committed — it is read, and the
+    next commit lands as N+2 instead of wedging on the taken name."""
+    import glob
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=2)
+    t.merge(mk(spark, [(1, "a", 1)]), mode="lww", batch_id=0)
+    n = t._current_version()
+    t.merge(mk(spark, [(2, "b", 2)]), mode="lww", batch_id=1)
+    # roll CURRENT back to N, as if the writer died before moving it
+    with open(os.path.join(t._manifest_dir, "CURRENT"), "w") as f:
+        f.write(str(n))
+    fresh = LakeTable(spark, t.path)
+    assert fresh._current_version() == n + 1
+    assert fresh.last_batch_id("default") == 1
+    assert state(fresh) == [(1, "a"), (2, "b")]
+    st = fresh.merge(mk(spark, [(3, "c", 3)]), mode="lww", batch_id=2)
+    assert st["version"] == n + 2
+    assert state(fresh) == [(1, "a"), (2, "b"), (3, "c")]
+    assert not glob.glob(os.path.join(t._manifest_dir, "*.tmp.*"))
+
+
+def test_commit_stress_loses_no_update(tmp_path):
+    """More committing threads than cores, each a read-modify-write of
+    the manifest retried on ``ConcurrentCommitError``: every commit of
+    every writer must survive in the final snapshot."""
+    import sys
+    import threading
+
+    from kafka_connect_jdbc_flatten_spark.lake.table import ConcurrentCommitError
+
+    t = LakeTable.create(None, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=2)
+    n_writers, n_commits = 8, 5
+    errors = []
+
+    def writer(i):
+        try:
+            for b in range(n_commits):
+                while True:
+                    base = t._current_version()
+                    m = t.manifest(base)
+                    m["last_committed_batch_id"][f"w{i}"] = b
+                    try:
+                        t._commit(base, m)
+                        break
+                    except ConcurrentCommitError:
+                        continue
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n_writers)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    m = t.manifest()
+    assert m["version"] == n_writers * n_commits
+    assert m["last_committed_batch_id"] == {
+        f"w{i}": n_commits - 1 for i in range(n_writers)
+    }

@@ -14,11 +14,10 @@ and uncompressed AVI (:mod:`.avi`: nested-RIFF walk + raw-DIB frame
 extraction with real container timestamps).  On top of decode:
 :func:`resize_png` (decode → downsample → re-encode),
 :func:`png_histogram`, :func:`wav_features` (zero crossings),
-:func:`sample_avi_frames`.  The generic any-format ``decode_image``
-stays PIL-guarded (no PIL/ffmpeg in the container) with
-``fake_decode_meta`` — a deterministic pure-bytes "decoder" (length +
-header peek + md5) — covering the plumbing for formats whose codecs
-genuinely aren't installable here (JPEG, compressed video, ...).
+:func:`sample_avi_frames`.  Formats without a dependency-free codec
+(JPEG, compressed video, ...) have no decoder; ``fake_decode_meta`` —
+a deterministic pure-bytes "decoder" (length + header peek + md5) —
+covers the plumbing for them.
 """
 
 from __future__ import annotations
@@ -52,14 +51,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType(), True),
     ]
 )
-
-try:  # pragma: no cover - not installed in this container
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except Exception:
-    _HAS_PIL = False
-
 
 def attach_fake_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic binary fixture: utf-8 bytes of the text column —
@@ -478,42 +469,6 @@ def sample_avi_frames(
             yield pd.DataFrame(cols)
 
     return _map_blob(df, id_col, blob_col, batches, AVI_FRAME_SCHEMA)
-
-
-def decode_image(df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob") -> DataFrame:
-    """Decode image binaries to (width, height, mode).  STUB: requires
-    PIL, which is not in this container."""
-    if not _HAS_PIL:  # pragma: no cover
-        raise NotImplementedError(
-            "image decode requires PIL; use fake_decode_meta for the "
-            "plumbing path in this environment"
-        )
-    import io
-
-    import pandas as pd
-    from PIL import Image
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("mode", T.StringType(), True),
-        ]
-    )
-
-    def batches(it):  # pragma: no cover - needs PIL
-        for pdf in it:
-            out = {"doc_id": [], "width": [], "height": [], "mode": []}
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                img = Image.open(io.BytesIO(bytes(b)))
-                out["doc_id"].append(i)
-                out["width"].append(img.width)
-                out["height"].append(img.height)
-                out["mode"].append(img.mode)
-            yield pd.DataFrame(out)
-
-    return _map_blob(df, id_col, blob_col, batches, schema)
 
 
 def frame_sample(

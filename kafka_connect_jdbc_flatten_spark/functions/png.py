@@ -1,10 +1,9 @@
 """Pure-stdlib PNG codec (zlib + struct + numpy): a REAL image decode
 kernel with no optional dependencies.
 
-The container ships no PIL/ffmpeg, so the multimodal layer's generic
-``decode_image`` stays PIL-guarded — but PNG itself needs nothing
-beyond the standard library: the stream is zlib-compressed scanlines
-behind a chunked container, and the five scanline filter types
+The multimodal layer has no generic image decoder (that would need
+PIL) — but PNG itself needs nothing beyond the standard library: the
+stream is zlib-compressed scanlines behind a chunked container, and the five scanline filter types
 (None/Sub/Up/Average/Paeth, PNG spec §6) are plain byte arithmetic.
 This module implements both directions:
 

@@ -28,6 +28,12 @@ plan changes:
   in a segment.  At 100 TB you size ``n_buckets`` so a bucket ≈ a few
   GB; skewed hot keys spread with the salt column handled upstream
   (``operators.skew``).
+* **File layout** — each table owns its files: every write lands in
+  ``<table>/data/commit-<id>/__bucket_p=<b>/``.  A write stages its
+  files under a ``data/staging-<id>/`` dir and renames each table's
+  slice into place, so one Spark job can write several tables'
+  segments and a crashed write leaves debris only inside ``data/``,
+  which ``vacuum()`` removes.
 * **Additive schema evolution** — new nullable columns append to the
   manifest schema; old files are read with the merged schema (missing
   columns → null).  Non-nullable additions without defaults are
@@ -45,11 +51,13 @@ silently losing a snapshot.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +67,8 @@ BUCKET_COL = "__bucket"
 SEQ_COL = "__seq"
 MOR_DELETE_COL = "__mor_del"
 SEG_COL = "__seg"
+# partition column of a multi-part write; its value is the part index
+PART_COL = "__part"
 # replace-mode reconcile broadcasts the delta winner map only while the
 # delta segments' on-disk bytes stay under this cap (a free upper bound
 # on winner-map rows); larger deltas take a shuffle join
@@ -595,43 +605,11 @@ class LakeTable:
     def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(BUCKET_COL, self._bucket_expr())
 
-    def _write_bucket_files(self, df: DataFrame, commit_id: str) -> dict[str, list[str]]:
-        """Write new state for the touched buckets; returns bucket→files.
-
-        The bucket id is duplicated into a partition column so the
-        directory layout is per-bucket, while the data column survives
-        in the parquet files (manifest reads use explicit file lists,
-        which bypass Hive partition discovery).
-        """
-        out_dir = os.path.join(self._data_dir, f"commit-{commit_id}")
-        part_col = BUCKET_COL + "_p"
-        (
-            df.withColumn(part_col, F.col(BUCKET_COL))
-            .repartition(F.col(BUCKET_COL))
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        new_files: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{part_col}="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = os.path.join(out_dir, entry)
-            new_files[b] = [
-                os.path.join(bdir, f)
-                for f in os.listdir(bdir)
-                if f.endswith(".parquet")
-            ]
-        return new_files
-
     def overwrite(self, df: DataFrame, batch_id: int | None = None, writer_id: str = "default") -> None:
         """Replace the whole table (bootstrap/backfill path)."""
         base = self._current_version()
         m = self.manifest()
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(self.with_bucket(df), commit_id)
-        m["files"] = new_files
+        m["files"] = write_files([(self, self.with_bucket(df))])[0]
         m["segments"] = []
         # overwrite rewrites EVERY bucket with _bucket_expr()'s hash —
         # record that layout on legacy manifests lacking bucket_cols so
@@ -696,42 +674,30 @@ class LakeTable:
         if mode not in ("replace", "lww", "append", "update"):
             raise ValueError(f"unknown merge mode {mode!r}")
         scope = list(scope_keys or self.key_cols)
+        rows = self.segment_rows(batch, scope, delete_col)
+        return write_segments([SegmentPart(self, rows, mode, scope, writer_id)], batch_id)[0]
+
+    def segment_rows(
+        self, batch: DataFrame, scope: list[str], delete_col: str | None = None
+    ) -> DataFrame:
+        """A batch as segment rows: aligned to the table schema and
+        projected to it, bucketed by ``scope``, with ``__mor_del`` set
+        from ``delete_col`` (false when absent)."""
         is_del = (
             F.coalesce(F.col(delete_col), F.lit(False))
             if delete_col is not None and delete_col in batch.columns
             else F.lit(False)
         )
-        rows = self._align(batch).select(
+        return self._align(batch).select(
             *[f.name for f in self.schema.fields],
             self._bucket_expr(scope).alias(BUCKET_COL),
             is_del.alias(MOR_DELETE_COL),
         )
-        return self._write_segment(rows, mode, scope, batch_id, writer_id)
 
     def _is_committed(self, batch_id: int | None, writer_id: str, m: dict) -> bool:
         return batch_id is not None and batch_id <= m["last_committed_batch_id"].get(
             writer_id, -1
         )
-
-    def _write_segment(
-        self,
-        rows: DataFrame,
-        mode: str,
-        scope: list[str],
-        batch_id: int | None,
-        writer_id: str,
-    ) -> dict:
-        """Write ``rows`` (carrying ``__bucket`` and ``__mor_del``) as
-        one delta segment and commit it; a redelivered batch is skipped
-        before any file is written."""
-        m = self.manifest()
-        if self._is_committed(batch_id, writer_id, m):
-            return {"skipped": True, "reason": "batch already committed"}
-        # refused here too, so a mismatched scope writes no files that
-        # the failing commit would leave orphaned
-        self._check_layout_scope(scope, m)
-        new_files = self._write_bucket_files(rows, uuid.uuid4().hex[:12])
-        return self.commit_segment(new_files, mode, scope, batch_id, writer_id)
 
     def commit_segment(
         self,
@@ -742,8 +708,7 @@ class LakeTable:
         writer_id: str = "default",
     ) -> dict:
         """Append already-written data files as a delta segment (the
-        metadata half of a MOR commit — lets a caller write MANY
-        tables' segments in one Spark job, then commit each manifest).
+        metadata half of a MOR commit, step 5 of ``write_segments``).
         A segment log of a different mode is compacted first, so the
         log only ever holds one mode."""
         base = self._current_version()
@@ -806,8 +771,7 @@ class LakeTable:
         base = self._current_version()
         touched = sorted({int(b) for seg in segments for b in seg["files"]})
         state = self.read(buckets=touched)  # reconciled, carries BUCKET_COL
-        commit_id = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(state, commit_id)
+        new_files = write_files([(self, state)])[0]
         files = dict(m["files"])
         for tb in touched:
             files.pop(str(tb), None)
@@ -845,7 +809,8 @@ class LakeTable:
             self._bucket_expr(scope).alias(BUCKET_COL),
             F.lit(True).alias(MOR_DELETE_COL),
         )
-        return self._write_segment(markers, "replace", scope, batch_id, writer_id)
+        part = SegmentPart(self, markers, "replace", scope, writer_id)
+        return write_segments([part], batch_id)[0]
 
     # ----------------------------------------------------------- evolution
     def evolve_schema(self, new_schema: T.StructType) -> list[str]:
@@ -882,7 +847,12 @@ class LakeTable:
         """Delete data files unreferenced by the ``retain_last`` newest
         snapshots (default 1 = current only — Iceberg's
         ``expire_snapshots``).  Versions inside the retention window
-        stay time-travel-readable after the vacuum."""
+        stay time-travel-readable after the vacuum.
+
+        Under ``data/`` only live parquet files and their ``.crc``
+        sidecars survive, so a commit or staging dir holding no live
+        parquet goes wholesale.  Returns the number of parquet files
+        removed."""
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
         cur = self._current_version()
@@ -893,56 +863,126 @@ class LakeTable:
             except ValueError:
                 continue
             live |= {os.path.abspath(p) for p in _data_files(m)}
+        keep = live | {
+            os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+            for p in live
+        }
         removed = 0
-        for root, _dirs, fs in os.walk(self._data_dir):
+        for root, _dirs, fs in os.walk(self._data_dir, topdown=False):
             for f in fs:
                 p = os.path.abspath(os.path.join(root, f))
-                if p.endswith(".parquet") and p not in live:
+                if p not in keep:
                     os.remove(p)
-                    removed += 1
-        # drop empty commit dirs
-        for entry in os.listdir(self._data_dir):
-            d = os.path.join(self._data_dir, entry)
-            if os.path.isdir(d) and not any(os.scandir(d)):
-                shutil.rmtree(d, ignore_errors=True)
+                    removed += f.endswith(".parquet")
+            if root != self._data_dir and not os.listdir(root):
+                os.rmdir(root)
         return removed
 
 
-def gc_unreferenced(roots: list[str], tables: list["LakeTable"]) -> int:
-    """Warehouse-level GC: delete parquet files under ``roots`` not
-    referenced by ANY table's current snapshot (base files or delta
-    segments), then prune empty directories.
+class SegmentPart(NamedTuple):
+    """One table's share of a ``write_segments`` call: segment rows
+    (from ``LakeTable.segment_rows``, or keys-only delete markers) and
+    how to commit them."""
 
-    Needed because the union write path lands multi-table segment
-    files under a shared ``warehouse/_commits/`` directory OUTSIDE
-    every table's data dir — per-table ``vacuum()`` never walks there,
-    so after ``compact()`` those files would be orphaned forever
-    (unbounded disk growth on the default streaming path).
+    table: LakeTable
+    rows: DataFrame
+    mode: str
+    scope: list[str]
+    writer_id: str
+
+
+def write_segments(parts: list[SegmentPart], batch_id: int | None) -> list[dict]:
+    """The one segment writer: write every part's rows as a delta
+    segment of its table and commit them; returns one stats dict per
+    part.
+
+    1. Parts whose writer already committed ``batch_id`` are dropped
+       before any file is written, so a replay after a crash between
+       two tables' commits rewrites only the tables that did not
+       commit.
+    2. Every remaining part's scope is checked against its table's
+       bucket layout before anything is written.
+    3. ``write_files`` writes each group of type-compatible parts in
+       one Spark job into a staging dir,
+    4. and renames each part's slice into its table's ``data/``.
+    5. Each table's ``commit_segment`` runs, in part order.
     """
-    live: set[str] = set()
-    for t in tables:
-        live |= {os.path.abspath(p) for p in _data_files(t.manifest())}
-    removed = 0
-    for root in roots:
-        if not os.path.isdir(root):
-            continue
-        for r, _dirs, fs in os.walk(root):
-            for f in fs:
-                p = os.path.abspath(os.path.join(r, f))
-                if p.endswith(".parquet") and p not in live:
-                    os.remove(p)
-                    removed += 1
-        # a commit dir holding no live parquet anymore is dead wholesale
-        # (only _SUCCESS markers and empty partition dirs remain)
-        for entry in os.listdir(root):
-            d = os.path.join(root, entry)
-            if not os.path.isdir(d):
-                continue
-            has_live = any(
-                os.path.abspath(os.path.join(r, f)) in live
-                for r, _dirs, fs in os.walk(d)
-                for f in fs
+    stats = [{"skipped": True, "reason": "batch already committed"} for _ in parts]
+    todo = []
+    for i, p in enumerate(parts):
+        m = p.table.manifest()
+        if not p.table._is_committed(batch_id, p.writer_id, m):
+            p.table._check_layout_scope(p.scope, m)
+            todo.append(i)
+    files = write_files([(parts[i].table, parts[i].rows) for i in todo])
+    for i, fl in zip(todo, files):
+        p = parts[i]
+        stats[i] = p.table.commit_segment(fl, p.mode, p.scope, batch_id, p.writer_id)
+    return stats
+
+
+def write_files(
+    parts: list[tuple[LakeTable, DataFrame]],
+) -> list[dict[str, list[str]]]:
+    """The file half of ``write_segments``: write each ``(table, rows)``
+    part (rows carry ``__bucket``) into ``<table>/data/commit-<id>/``,
+    one ``__bucket_p=<b>/`` dir per bucket; returns each part's
+    bucket→files map.
+
+    Parts are grouped so that a column name two parts of a group share
+    has ONE type: ``unionByName`` silently widens compatible numerics
+    (int ∪ long → long), and widened parquet is unreadable under the
+    table's explicit narrower schema.  Each group is one Spark job,
+    partitioned by (part index, bucket) into a staging dir inside the
+    first part's ``data/``; each part's slice then moves into its
+    table with one ``os.rename``, and the staging dir is removed.  The
+    bucket is duplicated into a partition column for the per-bucket
+    dirs; the data column stays in the files, which reads address by
+    explicit file lists that bypass partition discovery."""
+    out: list[dict[str, list[str]]] = [{} for _ in parts]
+    if not parts:
+        return out
+    cid = uuid.uuid4().hex[:12]
+    staging = os.path.join(parts[0][0]._data_dir, f"staging-{cid}")
+    groups: list[tuple[dict, list[int]]] = []
+    for i, (_t, rows) in enumerate(parts):
+        types = {f.name: f.dataType for f in rows.schema.fields}
+        for g_types, members in groups:
+            if all(g_types.get(c, dt) == dt for c, dt in types.items()):
+                g_types.update(types)
+                members.append(i)
+                break
+        else:
+            groups.append((types, [i]))
+    bucket_p = BUCKET_COL + "_p"
+    for g, (_types, members) in enumerate(groups):
+        gdir = os.path.join(staging, str(g))
+        tagged = [parts[i][1].withColumn(PART_COL, F.lit(i)) for i in members]
+        (
+            functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
             )
-            if not has_live:
-                shutil.rmtree(d, ignore_errors=True)
-    return removed
+            .withColumn(bucket_p, F.col(BUCKET_COL))
+            .repartition(F.col(PART_COL), F.col(BUCKET_COL))
+            .write.partitionBy(PART_COL, bucket_p)
+            .parquet(gdir)
+        )
+        for entry in os.listdir(gdir):
+            if not entry.startswith(f"{PART_COL}="):
+                continue
+            i = int(entry.split("=", 1)[1])
+            if i not in members:
+                raise RuntimeError(
+                    f"write produced partition {entry!r} matching no part of "
+                    f"{members} — refusing to commit a segment that would "
+                    "orphan its files"
+                )
+            cdir = os.path.join(parts[i][0]._data_dir, f"commit-{cid}")
+            os.rename(os.path.join(gdir, entry), cdir)
+            for bdir in os.listdir(cdir):
+                fl = os.listdir(os.path.join(cdir, bdir))
+                out[i][bdir.split("=", 1)[1]] = [
+                    os.path.join(cdir, bdir, f) for f in fl if f.endswith(".parquet")
+                ]
+    shutil.rmtree(staging)
+    return out

@@ -29,34 +29,17 @@ Semantics preserved:
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake.table import BUCKET_COL, MOR_DELETE_COL, SEQ_COL, LakeTable
+from ..lake.table import SEQ_COL, LakeTable, SegmentPart, write_segments
 from ..plans.flatten_plan import ARRAY, MAP, FlattenPlan, TableSpec
 from .explode import flatten_table, has_rows_expr
 from .lww import lww_reduce_auto
 
 DELETE_COL = "__is_delete"
-
-
-def _union_compatible(plan: FlattenPlan) -> bool:
-    """True iff every column name shared by two target tables has the
-    SAME dataType.  ``unionByName`` silently widens compatible numerics
-    (int ∪ long → long) and the widened parquet would be durably
-    committed as a segment a later ``read()`` (explicit narrower
-    schema) cannot read — so differing types must route to per-table
-    merges BEFORE writing."""
-    types: dict[str, object] = {}
-    for spec in plan.tables:
-        for f in spec.spark_schema.fields:
-            prev = types.setdefault(f.name, f.dataType)
-            if prev != f.dataType:
-                return False
-    return True
 
 
 class CdcApplier:
@@ -82,8 +65,8 @@ class CdcApplier:
         self.warehouse = warehouse
         self.plan = plan
         self.max_broadcast_keys = max_broadcast_keys
-        self._union_ok = _union_compatible(plan)
         self.tables: dict[str, LakeTable] = {}
+        self._scopes: dict[str, list[str]] = {}
         for spec in plan.tables:
             schema = T.StructType(
                 list(spec.spark_schema.fields)
@@ -96,13 +79,14 @@ class CdcApplier:
                     f"Table {spec.table_name} is missing and auto-creation "
                     "is disabled (auto.create=false, DbStructure.java:105-110)"
                 )
-            # the topic is stamped into the manifest so warehouse-wide
-            # operations (tombstone fan-out, GC) can scope by topic
-            # exactly, independent of table renames or prefix collisions;
-            # bucket_cols records the hash layout (the MERGE scope = the
-            # key-derived PKs) so every bucket-pruned rewrite — including
-            # overwrite() bootstraps — provably hashes the same way
+            # the topic is stamped into the manifest so the tombstone
+            # fan-out can scope by topic exactly, independent of table
+            # renames or prefix collisions; bucket_cols records the hash
+            # layout (the MERGE scope = the key-derived PKs) so every
+            # bucket-pruned rewrite — including overwrite() bootstraps —
+            # provably hashes the same way
             scope = list(spec.key_merge_keys) or keys
+            self._scopes[spec.table_name] = scope
             self.tables[spec.table_name] = LakeTable.create_if_not_exists(
                 spark, path, schema, keys, n_buckets,
                 properties={"topic": plan.config.topic},
@@ -118,6 +102,11 @@ class CdcApplier:
         n_rows_hint: int | None = None,
     ) -> dict:
         """Flatten + MERGE one micro-batch.  Returns per-table stats.
+
+        Every target table's segment goes through ONE ``write_segments``
+        call on the calling thread (one Spark write job per group of
+        type-compatible tables), then each table's manifest commits;
+        a replay skips the tables that already committed the batch.
 
         ``writer_suffix`` namespaces the exactly-once batch-id ledger —
         the schema-drift path applies one micro-batch as several
@@ -147,49 +136,77 @@ class CdcApplier:
         changelog = changelog.select(*needed)
 
         imode = self.plan.config.insert_mode
-        if imode == "insert":
+        # upsert replaces whole images (tombstones and shrunk arrays as
+        # scope markers); insert appends; insert.mode=update modifies
+        # existing keys only, unknown keys silently ignored (SQL UPDATE
+        # semantics, PostgreSqlDatabaseDialect update path)
+        mode = {"upsert": "replace", "insert": "append", "update": "update"}.get(imode)
+        if mode is None:
+            raise ValueError(f"unknown insert_mode {imode!r}")
+        is_del = F.col("op").eqNullSafe("d") | F.col("value").isNull()
+        deletes = None  # insert mode ignores tombstones
+        if mode == "append":
             # insert.mode=insert (JdbcSinkConfig.java:133-139): every
             # record appended as-is — no LWW collapse, duplicates
             # tolerated; tombstones are ignored (delete requires the
             # upsert/update paths).  One appended row per flattened
             # record = the reference's insert-count validation shape
-            # (BufferedRecords.java:228-239).
-            return self._apply_insert(changelog, batch_id, writer_suffix)
-        if imode not in ("upsert", "update"):
-            raise ValueError(f"unknown insert_mode {imode!r}")
-        # one image per key per batch: LWW on the binlog order.
-        # Broadcast-winner form while the winner set fits a broadcast:
-        # the wide envelope rows (after images) are NEVER shuffled —
-        # only (key, seq) pairs move (a column-pruned two-column scan),
-        # the body is kept by a broadcast-semi probe.  On a 423 MB/s-
-        # disk sandbox the shuffling forms were IO-bound and didn't
-        # scale 8→32 cores at all; this form leaves the scan
-        # embarrassingly parallel.  Beyond ``max_broadcast_keys``
-        # distinct keys (unbounded backfill batches) the guard falls
-        # back to the max_by aggregate form — one shuffle instead of a
-        # driver-sized broadcast.  The reduced set is persisted:
-        # every target table's flatten + its tombstone scan reads it
-        # instead of re-running the reduction 2×n_tables times.
-        reduced, _n_rows = lww_reduce_auto(
-            changelog, ["key"], ["seq"], self.max_broadcast_keys, n_rows_hint
-        )
-        is_del = F.col("op").eqNullSafe("d") | F.col("value").isNull()
-        upserts = reduced.filter(~is_del)
-        # tombstones are a sliver of a CDC batch but every target table
-        # derives its delete rows from them — cache the sliver so the
-        # per-table scans don't each re-read the full winner cache
-        deletes = reduced.filter(is_del).persist()
+            # (BufferedRecords.java:228-239).  Persisted: every target
+            # table's union branch reads it.
+            upserts = reduced = changelog.filter(~is_del).persist()
+        else:
+            # one image per key per batch: LWW on the binlog order.
+            # Broadcast-winner form while the winner set fits a
+            # broadcast: the wide envelope rows (after images) are
+            # NEVER shuffled — only (key, seq) pairs move (a
+            # column-pruned two-column scan), the body is kept by a
+            # broadcast-semi probe.  On a 423 MB/s-disk sandbox the
+            # shuffling forms were IO-bound and didn't scale 8→32 cores
+            # at all; this form leaves the scan embarrassingly
+            # parallel.  Beyond ``max_broadcast_keys`` distinct keys
+            # (unbounded backfill batches) the guard falls back to the
+            # max_by aggregate form — one shuffle instead of a
+            # driver-sized broadcast.  The reduced set is persisted:
+            # every target table's flatten + its tombstone scan reads
+            # it instead of re-running the reduction 2×n_tables times.
+            reduced, _n_rows = lww_reduce_auto(
+                changelog, ["key"], ["seq"], self.max_broadcast_keys, n_rows_hint
+            )
+            upserts = reduced.filter(~is_del)
+            # tombstones are a sliver of a CDC batch but every target
+            # table derives its delete rows from them — cache the
+            # sliver so the per-table scans don't each re-read the full
+            # winner cache
+            deletes = reduced.filter(is_del).persist()
 
         try:
-            if imode == "update":
-                # insert.mode=update: modify-only, unknown keys silently
-                # ignored (SQL UPDATE semantics,
-                # PostgreSqlDatabaseDialect update path)
-                stats = self._apply_update(upserts, deletes, batch_id, writer_suffix)
-            elif self._union_ok:
-                stats = self._apply_mor_union(upserts, deletes, batch_id, writer_suffix)
-            else:
-                stats = self._apply_per_table(upserts, deletes, batch_id, writer_suffix)
+            parts = []
+            for spec in plan.tables:
+                table, scope = self.tables[spec.table_name], self._scopes[spec.table_name]
+                rows = (
+                    self._batch_rows(spec, upserts, deletes)
+                    if mode == "replace"
+                    else self._flat(spec, upserts)
+                )
+                parts.append(SegmentPart(
+                    table, table.segment_rows(rows, scope, DELETE_COL), mode, scope,
+                    spec.table_name + writer_suffix,
+                ))
+            stats = dict(zip(self.tables, write_segments(parts, batch_id)))
+            if deletes is None:
+                return stats
+            if mode == "update" and plan.config.delete_enabled and (
+                deletes.limit(1).count() > 0
+            ):
+                # tombstones still wipe matching keys under update mode
+                for name, table in self.tables.items():
+                    st_del = table.delete_where_keys(
+                        deletes.select(*self._key_exprs()),
+                        scope_keys=self._scopes[name],
+                        batch_id=batch_id,
+                        writer_id=name + writer_suffix + "#del",
+                    )
+                    stats[name] = {"update": stats[name], "delete": st_del}
             # the foreign fan-out runs only after this plan's tables
             # committed; it isolates its own per-table failures
             stats.update(
@@ -197,40 +214,9 @@ class CdcApplier:
             )
             return stats
         finally:
-            deletes.unpersist()
+            if deletes is not None:
+                deletes.unpersist()
             reduced.unpersist()
-
-    def _apply_per_table(
-        self,
-        upserts: DataFrame,
-        deletes: DataFrame,
-        batch_id: int | None,
-        writer_suffix: str,
-    ) -> dict:
-        """One ``replace`` merge per table — the path for plans whose
-        tables cannot share one union write (``_union_compatible``)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _merge_one(spec: TableSpec) -> tuple[str, dict]:
-            table = self.tables[spec.table_name]
-            batch_rows = self._batch_rows(spec, upserts, deletes)
-            scope = list(spec.key_merge_keys) or list(spec.merge_keys)
-            return spec.table_name, table.merge(
-                batch_rows,
-                mode="replace",
-                scope_keys=scope,
-                delete_col=DELETE_COL,
-                batch_id=batch_id,
-                writer_id=spec.table_name + writer_suffix,
-            )
-
-        # Target tables are independent — submit their MERGEs as
-        # concurrent Spark jobs (the reference flags this as possible
-        # but applies serially, FlattenTransformation.java:89-91 /
-        # JdbcDbWriter.java:217-223; on Spark the scheduler interleaves
-        # the stages, hiding each table's fixed job latency).
-        with ThreadPoolExecutor(max_workers=len(self.plan.tables)) as pool:
-            return dict(pool.map(_merge_one, self.plan.tables))
 
     def _delete_from_foreign_tables(
         self, deletes: DataFrame, batch_id: int | None, writer_suffix: str
@@ -241,11 +227,15 @@ class CdcApplier:
         carried with whatever value schema its producer last used; a
         key inserted under a LATER schema has child rows in tables this
         plan has never seen.  Foreign tables are discovered from the
-        warehouse catalog by topic prefix; the delete key is the
-        key-derived PK, which propagates to every table of the topic
-        with the same names (key-PK propagation) and is also every
-        table's bucketing scope under CDC apply, so the marker segment
-        ``delete_where_keys`` commits is layout-consistent."""
+        warehouse catalog by the ``topic`` property stamped into their
+        manifests (the name prefix for tables older than it); the
+        delete key is the key-derived PK, which propagates to every
+        table of the topic with the same names (key-PK propagation) and
+        is also every table's bucketing scope under CDC apply, so the
+        marker segment ``delete_where_keys`` commits is
+        layout-consistent.  Runs after this plan's tables committed,
+        one ``delete_where_keys`` per foreign table with its failure
+        isolated into that table's stats entry."""
         if not self.plan.config.delete_enabled:
             return {}
         from ..sources.monitor import TableMonitor
@@ -296,7 +286,7 @@ class CdcApplier:
         ]
         if not foreign:
             return {}
-        keys_df = deletes.select(*self._key_exprs(None)).distinct()
+        keys_df = deletes.select(*self._key_exprs()).distinct()
         if keys_df.limit(1).count() == 0:
             return {}
         scope = [c.out_name for c in self.plan.key_pk_columns]
@@ -321,88 +311,12 @@ class CdcApplier:
                 stats[name] = {"error": f"{type(e).__name__}: {e}"}
         return stats
 
-    def _apply_insert(
-        self,
-        changelog: DataFrame,
-        batch_id: int | None,
-        writer_suffix: str,
-    ) -> dict:
-        """insert.mode=insert: flatten every non-tombstone envelope and
-        APPEND — duplicate keys accumulate, exactly like repeated JDBC
-        INSERTs."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        is_del = F.col("op").eqNullSafe("d") | F.col("value").isNull()
-        inserts = changelog.filter(~is_del).persist()
-        inserts.count()
-
-        def _append_one(spec: TableSpec) -> tuple[str, dict]:
-            flat = flatten_table(inserts, spec, carry_cols=("seq",)).withColumnRenamed(
-                "seq", SEQ_COL
-            )
-            # bucket by the TABLE LAYOUT (the key scope), like every
-            # other write path — appending under a different hash key
-            # (the old row-PK scope) stored rows in buckets a later
-            # bucket-pruned delete/replace would never read (the
-            # layout-mismatch class the _check_layout_scope guard
-            # exists for; it caught this site)
-            scope = list(spec.key_merge_keys) or list(spec.merge_keys) or None
-            return spec.table_name, self.tables[spec.table_name].merge(
-                flat,
-                mode="append",
-                scope_keys=scope,
-                batch_id=batch_id,
-                writer_id=spec.table_name + writer_suffix,
-            )
-
-        with ThreadPoolExecutor(max_workers=len(self.plan.tables)) as pool:
-            stats = dict(pool.map(_append_one, self.plan.tables))
-        inserts.unpersist()
-        return stats
-
-    def _apply_update(
-        self,
-        upserts: DataFrame,
-        deletes: DataFrame,
-        batch_id: int | None,
-        writer_suffix: str,
-    ) -> dict:
-        """insert.mode=update: row-level modify of EXISTING keys only;
-        tombstones still wipe matching keys when delete_enabled."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        plan = self.plan
-        has_deletes = (
-            plan.config.delete_enabled and deletes.limit(1).count() > 0
+    @staticmethod
+    def _flat(spec: TableSpec, envelopes: DataFrame) -> DataFrame:
+        """One table's flattened rows, carrying the binlog ``seq``."""
+        return flatten_table(envelopes, spec, carry_cols=("seq",)).withColumnRenamed(
+            "seq", SEQ_COL
         )
-
-        def _update_one(spec: TableSpec) -> tuple[str, dict]:
-            table = self.tables[spec.table_name]
-            flat = flatten_table(upserts, spec, carry_cols=("seq",)).withColumnRenamed(
-                "seq", SEQ_COL
-            )
-            # bucket on the key scope like every other write path —
-            # row-level matching on key_cols happens inside the merge
-            scope = list(spec.key_merge_keys) or list(spec.merge_keys)
-            st = table.merge(
-                flat,
-                mode="update",
-                scope_keys=scope,
-                batch_id=batch_id,
-                writer_id=spec.table_name + writer_suffix,
-            )
-            if has_deletes:
-                st_del = table.delete_where_keys(
-                    deletes.select(*self._key_exprs(spec)),
-                    scope_keys=scope,
-                    batch_id=batch_id,
-                    writer_id=spec.table_name + writer_suffix + "#del",
-                )
-                st = {"update": st, "delete": st_del}
-            return spec.table_name, st
-
-        with ThreadPoolExecutor(max_workers=len(plan.tables)) as pool:
-            return dict(pool.map(_update_one, plan.tables))
 
     def _batch_rows(self, spec: TableSpec, upserts: DataFrame, deletes: DataFrame) -> DataFrame:
         """Flattened upsert rows ∪ scope marker rows for one table.
@@ -419,11 +333,9 @@ class CdcApplier:
         every envelope writing one through the sink (r3 "Next round"
         #1: the blanket markers cost ~1.2 s/batch at sf0.1 and, being
         filtered on every read, taxed reads too)."""
-        flat = flatten_table(upserts, spec, carry_cols=("seq",)).withColumn(
-            DELETE_COL, F.lit(False)
-        )
+        flat = self._flat(spec, upserts).withColumn(DELETE_COL, F.lit(False))
         del_rows = deletes.select(
-            *self._key_exprs(spec),
+            *self._key_exprs(),
             F.col("seq"),
             F.lit(True).alias(DELETE_COL),
         )
@@ -433,7 +345,7 @@ class CdcApplier:
             # so its scope is always present in `flat`)
             del_rows = del_rows.unionByName(
                 upserts.filter(~has_rows_expr(spec)).select(
-                    *self._key_exprs(spec),
+                    *self._key_exprs(),
                     F.col("seq"),
                     F.lit(True).alias(DELETE_COL),
                 )
@@ -445,122 +357,11 @@ class CdcApplier:
                 sel.append(F.col(cs.out_name).cast(cs.dtype).alias(cs.out_name))
             else:
                 sel.append(F.lit(None).cast(cs.dtype).alias(cs.out_name))
-        del_full = del_rows.select(*sel, F.col("seq"), F.col(DELETE_COL))
-        return flat.withColumnRenamed("seq", SEQ_COL).unionByName(
-            del_full.withColumnRenamed("seq", SEQ_COL)
+        return flat.unionByName(
+            del_rows.select(*sel, F.col("seq").alias(SEQ_COL), F.col(DELETE_COL))
         )
 
-    def _apply_mor_union(
-        self,
-        upserts: DataFrame,
-        deletes: DataFrame,
-        batch_id: int | None,
-        writer_suffix: str = "",
-    ) -> dict:
-        """All tables' delta segments in ONE write job.
-
-        Each target table's batch rows get a ``__tbl`` discriminator
-        and union by name (missing columns → null; parquet nulls cost
-        ~nothing), then a single shuffle on (table, bucket) writes
-        every segment file.  Per micro-batch this collapses
-        ``n_tables`` write jobs (plus their plan/schedule latency, the
-        dominant cost of small triggers) into one; the per-table
-        manifest commits stay independent, so exactly-once semantics
-        per table are unchanged (a crash between commits is healed by
-        per-writer batch-id dedup on replay).
-        """
-        plan = self.plan
-        tbl_part, bucket_part = "__tbl_p", BUCKET_COL + "_p"
-        if batch_id is not None and all(
-            batch_id
-            <= self.tables[s.table_name].last_batch_id(s.table_name + writer_suffix)
-            for s in plan.tables
-        ):
-            return {
-                s.table_name: {"skipped": True, "reason": "batch already committed"}
-                for s in plan.tables
-            }
-
-        parts = []
-        for spec in plan.tables:
-            t = self.tables[spec.table_name]
-            scope = list(spec.key_merge_keys) or list(spec.merge_keys)
-            n_buckets = t.manifest()["n_buckets"]
-            rows = (
-                self._batch_rows(spec, upserts, deletes)
-                .withColumn(
-                    BUCKET_COL,
-                    F.pmod(
-                        F.xxhash64(*[F.col(c) for c in scope]), F.lit(n_buckets)
-                    ).cast("int"),
-                )
-                .withColumn(
-                    MOR_DELETE_COL, F.coalesce(F.col(DELETE_COL), F.lit(False))
-                )
-                .drop(DELETE_COL)
-                .withColumn("__tbl", F.lit(spec.table_name))
-            )
-            parts.append(rows)
-        big = parts[0]
-        for p in parts[1:]:
-            big = big.unionByName(p, allowMissingColumns=True)
-
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = os.path.join(self.warehouse, "_commits", f"commit-{commit_id}")
-        (
-            big.withColumn(tbl_part, F.col("__tbl"))
-            .withColumn(bucket_part, F.col(BUCKET_COL))
-            .repartition(F.col("__tbl"), F.col(BUCKET_COL))
-            .write.partitionBy(tbl_part, bucket_part)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        from urllib.parse import unquote
-
-        plan_names = {s.table_name for s in plan.tables}
-        files_by_table: dict[str, dict[str, list[str]]] = {}
-        if os.path.isdir(out_dir):
-            for d1 in os.listdir(out_dir):
-                if not d1.startswith(f"{tbl_part}="):
-                    continue
-                # Spark Hive-escapes special partition values as %XX —
-                # a renamed table containing such a character would
-                # otherwise parse to a name matching NO plan table, and
-                # the batch would commit an empty segment while its
-                # data files get GC'd (r3 review: silent data loss)
-                tname = unquote(d1.split("=", 1)[1])
-                if tname not in plan_names:
-                    raise RuntimeError(
-                        f"union write produced partition {tname!r} matching "
-                        f"no plan table {sorted(plan_names)} — refusing to "
-                        "commit a segment that would orphan its files"
-                    )
-                for d2 in os.listdir(os.path.join(out_dir, d1)):
-                    if not d2.startswith(f"{bucket_part}="):
-                        continue
-                    b = d2.split("=", 1)[1]
-                    bdir = os.path.join(out_dir, d1, d2)
-                    fl = [
-                        os.path.join(bdir, f)
-                        for f in os.listdir(bdir)
-                        if f.endswith(".parquet")
-                    ]
-                    if fl:
-                        files_by_table.setdefault(tname, {})[b] = fl
-
-        stats = {}
-        for spec in plan.tables:
-            scope = list(spec.key_merge_keys) or list(spec.merge_keys)
-            stats[spec.table_name] = self.tables[spec.table_name].commit_segment(
-                files_by_table.get(spec.table_name, {}),
-                mode="replace",
-                scope_keys=scope,
-                batch_id=batch_id,
-                writer_id=spec.table_name + writer_suffix,
-            )
-        return stats
-
-    def _key_exprs(self, spec: TableSpec):
+    def _key_exprs(self):
         exprs = []
         for c in self.plan.key_pk_columns:
             fname = c.source[1]
@@ -569,41 +370,16 @@ class CdcApplier:
         return exprs
 
     def maintain(self) -> dict:
-        """Periodic maintenance: compact every table's delta log, then
-        vacuum per-table data dirs AND the shared ``_commits/`` dir the
-        union write path lands segments in (per-table vacuum never
-        walks it — without this the compacted segments' files leak
-        forever).
-
-        The ``_commits/`` GC live-set is built from EVERY committed
-        table under the warehouse — discovered from disk via the
-        catalog listing, NOT from this applier's plan tables.  Under
-        schema drift, appliers for different schema fingerprints share
-        the warehouse with different table sets (an added array creates
-        a new child table); scoping the live-set to one applier's
-        tables would treat the other tables' still-referenced segment
-        files as orphans and delete them (permanent data loss, r2
-        advisory).  Same hole after restart: tables whose schema hasn't
-        been re-seen have no resident applier but must stay protected.
-        """
-        from ..lake.table import gc_unreferenced
-        from ..sources.monitor import TableMonitor
-
+        """Periodic maintenance: compact every plan table's delta log,
+        then vacuum its data dir.  Every table's files live under its
+        own dir, so this never touches the files of a table another
+        applier owns (under schema drift, appliers for different schema
+        fingerprints share the warehouse with different table sets)."""
         stats = {"compacted": 0, "vacuumed_files": 0}
         for table in self.tables.values():
             if not table.compact().get("skipped"):
                 stats["compacted"] += 1
             stats["vacuumed_files"] += table.vacuum()
-        all_tables = {
-            name: LakeTable(self.spark, os.path.join(self.warehouse, name))
-            for name in TableMonitor(self.warehouse).list_tables()
-        }
-        for name, table in self.tables.items():
-            all_tables.setdefault(name, table)
-        stats["vacuumed_files"] += gc_unreferenced(
-            [os.path.join(self.warehouse, "_commits")],
-            list(all_tables.values()),
-        )
         return stats
 
     def read(self, table_name: str) -> DataFrame:

@@ -51,7 +51,7 @@ class TableMonitor:
         out = []
         for entry in sorted(os.listdir(self.warehouse)):
             if entry.startswith("_"):
-                continue  # _commits / _lineage are not tables
+                continue  # _lineage and other _-prefixed dirs are not tables
             cur = os.path.join(self.warehouse, entry, "_manifest", "CURRENT")
             if not os.path.exists(cur):
                 continue

@@ -79,8 +79,8 @@ class StreamingIngest:
         self.batch_stats: list[dict] = []
 
     def _maintain(self, batch_id: int, appliers) -> None:
-        """Every ``compact_every`` micro-batches: compact + vacuum,
-        including the shared ``_commits/`` segment dir."""
+        """Every ``compact_every`` micro-batches: compact + vacuum every
+        table of every applier."""
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             for applier in appliers:
                 applier.maintain()

@@ -578,34 +578,6 @@ def test_arrow_query_collects_are_byte_guarded(spark, monkeypatch):
     assert got == expect
 
 
-def test_decode_image_real_png_when_pil_available(spark):
-    """r3 review: decode_image is honestly stubbed behind the PIL
-    guard — this test self-verifies the kernel the moment the
-    dependency lands in the container (skipped until then).  Generates
-    a real PNG in-process, runs the Arrow mapInPandas decode, and
-    checks width/height/mode."""
-    import pytest
-
-    PIL = pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from kafka_connect_jdbc_flatten_spark.functions.multimodal import decode_image
-
-    def png_bytes(w, h):
-        buf = io.BytesIO()
-        Image.new("RGB", (w, h), (250, 128, 3)).save(buf, format="PNG")
-        return buf.getvalue()
-
-    df = spark.createDataFrame(
-        [(1, bytearray(png_bytes(8, 6))), (2, bytearray(png_bytes(3, 5)))],
-        "doc_id long, blob binary",
-    )
-    got = {r.doc_id: (r.width, r.height, r.mode) for r in decode_image(df).collect()}
-    assert got == {1: (8, 6, "RGB"), 2: (3, 5, "RGB")}
-
-
 # ------------------------------------------------------------- png codec
 def test_png_codec_roundtrip_all_filters_and_channels():
     """The pure-stdlib codec round-trips every (channels, filter)

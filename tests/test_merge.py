@@ -239,11 +239,9 @@ def test_lww_auto_cardinality_guard(spark):
 
 def test_mixed_type_plans_route_to_per_table_merge(spark, tmp_path):
     """Two target tables sharing a column NAME with different TYPES
-    (int vs long) must take the per-table merge path: unionByName
+    (int vs long) must be written by separate jobs: unionByName
     would silently widen the int column and durably commit parquet a
     later explicit-schema read() cannot open (ADVICE r01)."""
-    import os
-
     from kafka_connect_jdbc_flatten_spark.config import FlattenConfig
 
     value_schema = T.StructType(
@@ -288,14 +286,11 @@ def test_mixed_type_plans_route_to_per_table_merge(spark, tmp_path):
     )
     wh = str(tmp_path / "wh")
     ap = CdcApplier(spark, wh, mixed_plan, n_buckets=2)
-    assert not ap._union_ok
     batch = spark.createDataFrame(
         [("m", 0, 1, TS, "CreateTime", (1,), None, (10, [(7, 100)]), "c", 1, TS)],
         ch_schema,
     )
     ap.apply_batch(batch, batch_id=0)
-    # union fast path not taken — nothing under _commits/
-    assert not os.path.exists(os.path.join(wh, "_commits"))
     root = ap.read("m_rv")
     items = ap.read("m_rv_items")
     # declared types survive the commit and the read
@@ -303,6 +298,37 @@ def test_mixed_type_plans_route_to_per_table_merge(spark, tmp_path):
     assert items.schema["x"].dataType == T.IntegerType()
     assert [(r.rkey_rid, r.x) for r in root.collect()] == [(1, 10)]
     assert [(r.rkey_rid, r.x, r.item_id) for r in items.collect()] == [(1, 7, 100)]
+
+
+@pytest.mark.parametrize("insert_mode", ["upsert", "insert", "update"])
+def test_apply_batch_jobs_carry_the_callers_job_group(spark, tmp_path, insert_mode):
+    """Every Spark job apply_batch starts runs on the calling thread, so
+    a job group set there (how traces attribute jobs to phases) covers
+    all of them: none is left without a group."""
+    import dataclasses
+
+    cfg = dataclasses.replace(transcript_flatten_config(), insert_mode=insert_mode)
+    mplan = compile_flatten_plan(
+        TRANSCRIPT_KEY_SCHEMA, TRANSCRIPT_VALUE_SCHEMA, cfg,
+        value_record_name="Conversation", key_record_name="ConversationKey",
+    )
+    ap = CdcApplier(spark, str(tmp_path / "wh"), mplan, n_buckets=4)
+    batch = mkdf(spark, [
+        env("c1", [(0, "u", "hi", "t"), (1, "a", "yo", "t")], "c", 1),
+        env("c2", [(0, "u", "x", "t")], "c", 2),
+        env("c2", None, "d", 3),
+    ])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"apply-{insert_mode}"
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "apply_batch job attribution")
+    try:
+        ap.apply_batch(batch, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
 def test_insert_mode_appends_duplicates_and_ignores_tombstones(spark, plan, tmp_path):

@@ -1,5 +1,5 @@
 """Merge-on-read lake-table tests: delta segments, reconciliation,
-compaction, vacuum, and the CdcApplier union-write fast path."""
+compaction, vacuum, and the multi-table segment writer."""
 
 import datetime
 import os
@@ -105,8 +105,9 @@ def test_schema_evolution_with_segments(spark, tmp_path):
 
 
 def test_union_write_commit_dir_layout(spark, tmp_path):
-    """The CdcApplier MOR fast path writes every table's segment in one
-    job under _commits/ and each manifest references its slice."""
+    """The CdcApplier writes every table's segment in one job; each
+    table's slice lands in its own data/commit-<id>/ (one id shared by
+    the tables), and the warehouse holds no shared commit dir."""
     from kafka_connect_jdbc_flatten_spark.operators.merge import CdcApplier
     from kafka_connect_jdbc_flatten_spark.plans import compile_flatten_plan
     from kafka_connect_jdbc_flatten_spark.sources.changelog import (
@@ -135,13 +136,21 @@ def test_union_write_commit_dir_layout(spark, tmp_path):
         spark.createDataFrame(rows, CHANGELOG_SCHEMA), batch_id=0
     )
     assert all(not st["skipped"] for st in stats.values()), stats
-    commits = os.listdir(os.path.join(wh, "_commits"))
-    assert len(commits) == 1  # ONE write job for both tables
+    commit_ids = set()
     for name, table in ap.tables.items():
+        data = os.path.join(wh, name, "data")
+        (commit,) = os.listdir(data)  # no staging dir left behind
+        assert commit.startswith("commit-")
+        commit_ids.add(commit)
         seg_files = table.manifest()["segments"][0]["files"]
-        for fl in seg_files.values():
+        for b, fl in seg_files.items():
             for f in fl:
-                assert "_commits" in f and os.path.exists(f)
+                assert os.path.dirname(f) == os.path.join(
+                    data, commit, f"__bucket_p={b}"
+                )
+                assert os.path.exists(f)
+    assert len(commit_ids) == 1  # ONE write for both tables
+    assert sorted(os.listdir(wh)) == sorted(ap.tables)
     assert ap.read("transcripts_conversation_turns").count() == 1
 
 
@@ -209,10 +218,10 @@ def test_crash_between_table_commits_heals_on_replay(spark, tmp_path):
 
 
 def test_maintain_gcs_orphaned_union_segment_files(spark, tmp_path):
-    """Union-write segments live under warehouse/_commits/, OUTSIDE
-    every table's data dir; per-table vacuum never walks there, so
-    compaction used to orphan them forever (ADVICE r01).  maintain()
-    compacts + vacuums + GCs the shared dir."""
+    """Compaction must not orphan the segment files of a multi-table
+    write (ADVICE r01, when they lived in a shared dir per-table
+    vacuum never walked).  Each table now owns its segment files, so
+    maintain() = per-table compact + vacuum leaves only base files."""
     import glob
 
     from kafka_connect_jdbc_flatten_spark.operators.merge import CdcApplier
@@ -241,17 +250,150 @@ def test_maintain_gcs_orphaned_union_segment_files(spark, tmp_path):
             )
         ]
         ap.apply_batch(spark.createDataFrame(rows, CHANGELOG_SCHEMA), batch_id=i)
-    commits = os.path.join(wh, "_commits")
-    assert glob.glob(os.path.join(commits, "**", "*.parquet"), recursive=True)
+    seg_files = {
+        f for t in ap.tables.values() for seg in t.manifest()["segments"]
+        for fl in seg["files"].values() for f in fl
+    }
+    assert seg_files and all(os.path.exists(f) for f in seg_files)
 
     stats = ap.maintain()
     assert stats["compacted"] == 2  # both tables had segments
-    # all segment files folded into the base and GC'd — none left
-    assert not glob.glob(os.path.join(commits, "**", "*.parquet"), recursive=True)
+    # all segment files folded into the base and vacuumed — every
+    # parquet file left under a table dir is one of its base files
+    assert not any(os.path.exists(f) for f in seg_files)
+    for name, t in ap.tables.items():
+        on_disk = set(glob.glob(os.path.join(wh, name, "data", "**", "*.parquet"),
+                                recursive=True))
+        assert on_disk == {f for fl in t.manifest()["files"].values() for f in fl}
     assert ap.read("transcripts_conversation_turns").count() == 3
     # second maintain is a no-op
     assert ap.maintain()["compacted"] == 0
     assert ap.read("transcripts_conversation").count() == 3
+
+
+def _transcript_applier(spark, wh):
+    from kafka_connect_jdbc_flatten_spark.operators.merge import CdcApplier
+    from kafka_connect_jdbc_flatten_spark.plans import compile_flatten_plan
+    from kafka_connect_jdbc_flatten_spark.sources.changelog import (
+        TRANSCRIPT_KEY_SCHEMA,
+        TRANSCRIPT_VALUE_SCHEMA,
+        transcript_flatten_config,
+    )
+
+    plan = compile_flatten_plan(
+        TRANSCRIPT_KEY_SCHEMA, TRANSCRIPT_VALUE_SCHEMA,
+        transcript_flatten_config(),
+        value_record_name="Conversation", key_record_name="ConversationKey",
+    )
+    return CdcApplier(spark, wh, plan, n_buckets=4)
+
+
+def _envelope(conv, texts, op, seq):
+    value = None if op == "d" else (
+        conv, [(i, "u", t, "", TS) for i, t in enumerate(texts)]
+    )
+    return ("transcripts", 0, seq, TS, "CreateTime", (conv,), None, value, op, seq, TS)
+
+
+def test_crash_after_files_written_before_any_manifest(spark, tmp_path):
+    """Crash point: the writer has written and renamed every table's
+    segment files, then the first table's commit raises.  No manifest
+    moves; the replay ends in the same tables as a fault-free run, and
+    maintain() leaves no unreferenced parquet and no staging dir."""
+    import glob
+
+    import pytest
+
+    from kafka_connect_jdbc_flatten_spark.lake.table import _data_files
+    from kafka_connect_jdbc_flatten_spark.sources.changelog import CHANGELOG_SCHEMA
+
+    batches = [
+        [_envelope("c1", ["a", "b"], "c", 1), _envelope("c2", ["x"], "c", 2)],
+        [
+            _envelope("c1", ["a2"], "u", 3),
+            _envelope("c2", None, "d", 4),
+            _envelope("c3", ["y", "z"], "c", 5),
+        ],
+    ]
+
+    def apply(ap, i):
+        return ap.apply_batch(spark.createDataFrame(batches[i], CHANGELOG_SCHEMA), batch_id=i)
+
+    def tables(ap):
+        return {n: sorted(map(tuple, ap.read(n).collect())) for n in ap.tables}
+
+    clean = _transcript_applier(spark, str(tmp_path / "clean"))
+    apply(clean, 0)
+    apply(clean, 1)
+
+    wh = str(tmp_path / "wh")
+    ap = _transcript_applier(spark, wh)
+    apply(ap, 0)
+    versions = {n: t._current_version() for n, t in ap.tables.items()}
+    first = ap.tables[ap.plan.tables[0].table_name]
+
+    def boom(*a, **kw):
+        raise RuntimeError("simulated crash before the first manifest commit")
+
+    first.commit_segment = boom
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        apply(ap, 1)
+    del first.commit_segment
+    assert {n: t._current_version() for n, t in ap.tables.items()} == versions
+    for n, t in ap.tables.items():
+        written = set(glob.glob(os.path.join(wh, n, "data", "**", "*.parquet"),
+                                recursive=True))
+        assert written - set(_data_files(t.manifest())), n  # files, no manifest
+
+    stats = apply(ap, 1)
+    assert all(not st["skipped"] for n, st in stats.items() if n in ap.tables)
+    assert tables(ap) == tables(clean)
+
+    ap.maintain()
+    assert tables(ap) == tables(clean)
+    referenced = {
+        os.path.abspath(f) for t in ap.tables.values() for f in _data_files(t.manifest())
+    }
+    on_disk = {
+        os.path.abspath(f)
+        for f in glob.glob(os.path.join(wh, "**", "*.parquet"), recursive=True)
+    }
+    assert on_disk == referenced
+    assert not glob.glob(os.path.join(wh, "**", "staging-*"), recursive=True)
+
+
+def test_vacuum_leaves_no_debris(spark, tmp_path):
+    """After merges, compact() and vacuum(), every file under data/ is
+    a live parquet file or its .crc sidecar, and every commit dir
+    still holds live parquet — superseded files' sidecars, _SUCCESS
+    markers and their dirs are gone too."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=4)
+    data = os.path.abspath(os.path.join(t.path, "data"))
+
+    def assert_clean():
+        live = {os.path.abspath(f) for f in sum(t.manifest()["files"].values(), [])}
+        for root, _dirs, fs in os.walk(data):
+            for f in fs:
+                p = os.path.join(root, f)
+                sidecar_of = os.path.join(root, f[1:-len(".crc")])
+                assert p in live or (f.startswith(".") and sidecar_of in live), p
+        for entry in os.listdir(data):
+            assert any(p.startswith(os.path.join(data, entry) + os.sep) for p in live), entry
+
+    t.merge(mk(spark, [(i, f"a{i}", 1) for i in range(8)]), mode="lww", batch_id=0)
+    t.merge(mk(spark, [(1, "b", 2), (9, "c", 2)]), mode="lww", batch_id=1)
+    t.compact()
+    assert t.vacuum() > 0
+    assert_clean()
+    # a bucket-scoped compaction leaves the older base dir partly live
+    t.merge(mk(spark, [(2, "d", 3)]), mode="lww", batch_id=2)
+    t.compact()
+    assert t.vacuum() > 0
+    assert_clean()
+    assert state(t) == sorted(
+        [(i, f"a{i}") for i in range(8) if i not in (1, 2)]
+        + [(1, "b"), (2, "d"), (9, "c")]
+    )
 
 
 def test_db_timezone_timestamp_semantics(spark, tmp_path):
@@ -481,6 +623,7 @@ def test_commit_segment_mixed_mode_keeps_layout_backfill(spark, tmp_path):
     from kafka_connect_jdbc_flatten_spark.lake.table import (
         BUCKET_COL,
         MOR_DELETE_COL,
+        write_files,
     )
 
     schema = T.StructType(
@@ -509,8 +652,8 @@ def test_commit_segment_mixed_mode_keeps_layout_backfill(spark, tmp_path):
     del m["bucket_cols"]
     with open(mp, "w") as f:
         json.dump(m, f)
-    # metadata-half commit (the multi-table union-writer path) of a
-    # replace segment: mixed modes force the compact + manifest re-read
+    # metadata-half commit of a replace segment written by the writer's
+    # file half: mixed modes force the compact + manifest re-read
     out = (
         t._align(mk2([(1, 0, "b", 2)]))
         .withColumn(
@@ -519,7 +662,7 @@ def test_commit_segment_mixed_mode_keeps_layout_backfill(spark, tmp_path):
         .withColumn(MOR_DELETE_COL, F.lit(False))
         .select(*[f.name for f in schema.fields], BUCKET_COL, MOR_DELETE_COL)
     )
-    files = t._write_bucket_files(out, "r4backfill")
+    (files,) = write_files([(t, out)])
     st = t.commit_segment(files, mode="replace", scope_keys=["k"], batch_id=1)
     assert not st.get("skipped")
     assert t.manifest()["bucket_cols"] == ["k"]

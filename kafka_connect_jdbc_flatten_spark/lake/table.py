@@ -29,11 +29,14 @@ plan changes:
   GB; skewed hot keys spread with the salt column handled upstream
   (``operators.skew``).
 * **File layout** — each table owns its files: every write lands in
-  ``<table>/data/commit-<id>/__bucket_p=<b>/``.  A write stages its
-  files under a ``data/staging-<id>/`` dir and renames each table's
-  slice into place, so one Spark job can write several tables'
-  segments and a crashed write leaves debris only inside ``data/``,
-  which ``vacuum()`` removes.
+  ``<table>/data/commit-<id>/``.  A delta segment is one bucket-sorted
+  file per table (several, bucket-disjoint, for a large batch),
+  listed in the manifest under every bucket it holds; base files
+  (``compact``, ``overwrite``) sit one ``__bucket_p=<b>/`` dir per
+  bucket.  A write stages its files under a ``data/staging-<id>/``
+  dir and renames each table's slice into place, so one Spark job
+  can write several tables' segments and a crashed write leaves
+  debris only inside ``data/``, which ``vacuum()`` removes.
 * **Additive schema evolution** — new nullable columns append to the
   manifest schema; old files are read with the merged schema (missing
   columns → null).  Non-nullable additions without defaults are
@@ -59,7 +62,7 @@ import time
 import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -235,11 +238,12 @@ class LakeTable:
     def read(
         self, buckets: list[int] | None = None, version: int | None = None
     ) -> DataFrame:
-        """Snapshot read; ``buckets`` restricts to those partitions
-        (partition pruning — only the touched buckets' files are
-        scanned).  When merge-on-read delta segments exist they are
-        reconciled here (latest segment wins per scope / per key, see
-        ``merge``).
+        """Snapshot read; ``buckets`` restricts to those buckets: only
+        the files the manifest lists under them are scanned, each once,
+        and a ``__bucket`` filter drops the other buckets' rows of
+        segment files that hold several.  When merge-on-read delta
+        segments exist they are reconciled here (latest segment wins
+        per scope / per key, see ``merge``).
 
         ``version`` pins a historical snapshot (``VERSION AS OF``):
         manifests are immutable, so the read plan is identical — only
@@ -264,21 +268,26 @@ class LakeTable:
         segments = m.get("segments", [])
         # base files are segment 0, delta segments 1..n in commit order
         file_maps = [m["files"], *(seg["files"] for seg in segments)]
-        file_lists = [
-            [f for b, fl in fm.items() if buckets is None or int(b) in buckets
-             for f in fl]
-            for fm in file_maps
-        ]
         # explicit schema ⇒ files lacking newly-evolved columns, the MOR
         # delete flag or (keys-only delete markers) the payload read as
         # null (additive evolution)
-        parts = [
-            self.spark.read.schema(read_schema)
-            .parquet(*fl)
-            .withColumn(SEG_COL, F.lit(i))
-            for i, fl in enumerate(file_lists)
-            if fl
-        ]
+        parts = []
+        for i, fm in enumerate(file_maps):
+            fl = list(dict.fromkeys(
+                f for b, fs in fm.items() if buckets is None or int(b) in buckets
+                for f in fs
+            ))
+            if not fl:
+                continue
+            part = self.spark.read.schema(read_schema).parquet(*fl).withColumn(SEG_COL, F.lit(i))
+            # a base file holds one bucket; a segment file may hold
+            # several, listed under each of them.  array_contains over
+            # an array literal compiles to the same code for every
+            # bucket list, where an int IN inlines its values and so
+            # recompiles the scan for each bucket a lookup reads.
+            if i and buckets is not None:
+                part = part.filter(F.array_contains(F.lit(list(buckets)), F.col(BUCKET_COL)))
+            parts.append(part)
         if not parts:
             return self.spark.createDataFrame(
                 [], T.StructType(list(schema.fields) + [bucket_field])
@@ -436,13 +445,8 @@ class LakeTable:
         """On-disk bytes of the delta segments — a free driver-side
         upper bound on reconcile key-map rows, shared by the update
         and replace broadcast guards."""
-        return sum(
-            os.path.getsize(f)
-            for seg in segments
-            for fl in seg["files"].values()
-            for f in fl
-            if os.path.exists(f)
-        )
+        files = {f for seg in segments for fl in seg["files"].values() for f in fl}
+        return sum(os.path.getsize(f) for f in files if os.path.exists(f))
 
     def _reconcile(self, allrows: DataFrame, m: dict) -> DataFrame:
         """Merge-on-read reconciliation.
@@ -609,7 +613,7 @@ class LakeTable:
         """Replace the whole table (bootstrap/backfill path)."""
         base = self._current_version()
         m = self.manifest()
-        m["files"] = write_files([(self, self.with_bucket(df))])[0]
+        m["files"] = write_files([(self, self.with_bucket(df))], base=True)[0]
         m["segments"] = []
         # overwrite rewrites EVERY bucket with _bucket_expr()'s hash —
         # record that layout on legacy manifests lacking bucket_cols so
@@ -771,7 +775,7 @@ class LakeTable:
         base = self._current_version()
         touched = sorted({int(b) for seg in segments for b in seg["files"]})
         state = self.read(buckets=touched)  # reconciled, carries BUCKET_COL
-        new_files = write_files([(self, state)])[0]
+        new_files = write_files([(self, state)], base=True)[0]
         files = dict(m["files"])
         for tb in touched:
             files.pop(str(tb), None)
@@ -922,23 +926,40 @@ def write_segments(parts: list[SegmentPart], batch_id: int | None) -> list[dict]
 
 
 def write_files(
-    parts: list[tuple[LakeTable, DataFrame]],
+    parts: list[tuple[LakeTable, DataFrame]], base: bool = False
 ) -> list[dict[str, list[str]]]:
     """The file half of ``write_segments``: write each ``(table, rows)``
-    part (rows carry ``__bucket``) into ``<table>/data/commit-<id>/``,
-    one ``__bucket_p=<b>/`` dir per bucket; returns each part's
-    bucket→files map.
+    part (rows carry ``__bucket``) into ``<table>/data/commit-<id>/``;
+    returns each part's bucket→files map.
+
+    Two layouts, because segments and base files are replaced
+    differently:
+
+    * **segment** (default) — a part's files sit directly in its commit
+      dir, rows sorted by ``__bucket`` inside each file.  A trickle
+      batch coalesces into one task, i.e. one file per table; a large
+      batch writes several files per table, no two sharing a bucket.
+      Each bucket the part holds maps to all of the part's files, so
+      ``read(buckets=…)`` filters by ``__bucket`` after the scan.  A
+      segment is only ever dropped whole (``compact`` folds every
+      segment), so mixing buckets in one file costs nothing there,
+      and it saves opening, committing and renaming a file per bucket.
+    * **base** (``base=True``: ``compact``, ``overwrite``) — one
+      ``__bucket_p=<b>/`` dir per bucket.  Bucket-scoped compaction
+      replaces base files one bucket at a time, which a file holding
+      several buckets would not allow.  The bucket is duplicated into
+      that partition column; the data column stays in the files, which
+      reads address by explicit file lists that bypass partition
+      discovery.
 
     Parts are grouped so that a column name two parts of a group share
     has ONE type: ``unionByName`` silently widens compatible numerics
     (int ∪ long → long), and widened parquet is unreadable under the
     table's explicit narrower schema.  Each group is one Spark job,
-    partitioned by (part index, bucket) into a staging dir inside the
-    first part's ``data/``; each part's slice then moves into its
-    table with one ``os.rename``, and the staging dir is removed.  The
-    bucket is duplicated into a partition column for the per-bucket
-    dirs; the data column stays in the files, which reads address by
-    explicit file lists that bypass partition discovery."""
+    repartitioned by (part index, bucket) and partitioned by part
+    index into a staging dir inside the first part's ``data/``; each
+    part's slice then moves into its table with one ``os.rename``.
+    The staging dir is removed whether or not the write succeeds."""
     out: list[dict[str, list[str]]] = [{} for _ in parts]
     if not parts:
         return out
@@ -955,34 +976,54 @@ def write_files(
         else:
             groups.append((types, [i]))
     bucket_p = BUCKET_COL + "_p"
-    for g, (_types, members) in enumerate(groups):
-        gdir = os.path.join(staging, str(g))
-        tagged = [parts[i][1].withColumn(PART_COL, F.lit(i)) for i in members]
-        (
-            functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged
+    try:
+        for g, (_types, members) in enumerate(groups):
+            gdir = os.path.join(staging, str(g))
+            rows = functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [parts[i][1].withColumn(PART_COL, F.lit(i)) for i in members],
             )
-            .withColumn(bucket_p, F.col(BUCKET_COL))
-            .repartition(F.col(PART_COL), F.col(BUCKET_COL))
-            .write.partitionBy(PART_COL, bucket_p)
-            .parquet(gdir)
-        )
-        for entry in os.listdir(gdir):
-            if not entry.startswith(f"{PART_COL}="):
-                continue
-            i = int(entry.split("=", 1)[1])
-            if i not in members:
-                raise RuntimeError(
-                    f"write produced partition {entry!r} matching no part of "
-                    f"{members} — refusing to commit a segment that would "
-                    "orphan its files"
+            if base:
+                rows = rows.withColumn(bucket_p, F.col(BUCKET_COL))
+            rows = rows.repartition(F.col(PART_COL), F.col(BUCKET_COL))
+            if base:
+                rows.write.partitionBy(PART_COL, bucket_p).parquet(gdir)
+            else:
+                # the (part, bucket) pairs ride the write job as metrics
+                held = Observation()
+                (
+                    rows.sortWithinPartitions(PART_COL, BUCKET_COL)
+                    .observe(held, F.collect_set(F.struct(PART_COL, BUCKET_COL)).alias("pb"))
+                    .write.partitionBy(PART_COL)
+                    .parquet(gdir)
                 )
-            cdir = os.path.join(parts[i][0]._data_dir, f"commit-{cid}")
-            os.rename(os.path.join(gdir, entry), cdir)
-            for bdir in os.listdir(cdir):
-                fl = os.listdir(os.path.join(cdir, bdir))
-                out[i][bdir.split("=", 1)[1]] = [
-                    os.path.join(cdir, bdir, f) for f in fl if f.endswith(".parquet")
-                ]
-    shutil.rmtree(staging)
+                buckets_of: dict[int, list[str]] = {}
+                for i, b in sorted(held.get["pb"]):
+                    buckets_of.setdefault(i, []).append(str(b))
+            for entry in os.listdir(gdir):
+                if not entry.startswith(f"{PART_COL}="):
+                    continue
+                i = int(entry.split("=", 1)[1])
+                if i not in members:
+                    raise RuntimeError(
+                        f"write produced partition {entry!r} matching no part of "
+                        f"{members} — refusing to commit a segment that would "
+                        "orphan its files"
+                    )
+                cdir = os.path.join(parts[i][0]._data_dir, f"commit-{cid}")
+                os.rename(os.path.join(gdir, entry), cdir)
+                if base:
+                    for bdir in os.listdir(cdir):
+                        fl = os.listdir(os.path.join(cdir, bdir))
+                        out[i][bdir.split("=", 1)[1]] = [
+                            os.path.join(cdir, bdir, f) for f in fl if f.endswith(".parquet")
+                        ]
+                else:
+                    fl = [
+                        os.path.join(cdir, f)
+                        for f in sorted(os.listdir(cdir)) if f.endswith(".parquet")
+                    ]
+                    out[i] = {b: fl for b in buckets_of[i]}
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return out

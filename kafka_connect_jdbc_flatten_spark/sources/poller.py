@@ -171,76 +171,55 @@ class TablePoller:
             )
         )
 
-        order = [e.asc() for e in crit.order_exprs()]
-
-        # short-page fast path (r6): when the remainder fits one page,
-        # the LIMIT selects ALL matching rows, so the batch can skip it
-        # — ``orderBy().limit(big_n)`` plans as a single-partition
-        # GlobalLimit merge, while the plain ``orderBy`` stays a
-        # parallel range sort with the identical row set AND order
-        # ((ts, inc) totally orders rows, the same assumption offset
-        # resume itself relies on).  One narrow count answers "does it
-        # fit"; the offset then advances via a scan-parallel max
-        # aggregate instead of an aggregate over the sorted batch, and
-        # the count gives poll_all emptiness for free (it paid a full
-        # batch count per page before).
+        # one narrow count answers "does the remainder fit one page";
+        # it also gives poll_all emptiness for free (r6)
         n_match = filtered.count()
         self._last_poll_rows = n_match
         if n_match == 0:
             return filtered  # empty; offset unchanged
-        if n_match <= self.batch_max_rows:
-            agg_exprs = []
-            if crit.ts_cols:
-                agg_exprs.append(crit.ts_expr().alias("__ts"))
-            if self.inc_col:
-                agg_exprs.append(F.col(self.inc_col).alias("__inc"))
-            tail = filtered.agg(
-                F.max(F.struct(*agg_exprs)).alias("m")
-            ).collect()[0]["m"]
-            if tail is not None:
-                vals = list(tail)
-                if crit.ts_cols:
-                    self.offset["timestamp"] = vals.pop(0).isoformat()
-                if self.inc_col:
-                    self.offset["incrementing"] = vals.pop(0)
-            return filtered.orderBy(*order)
+        order = [e.asc() for e in crit.order_exprs()]
+        # the page's (ts, inc) maximum: on a short page a scan-parallel
+        # aggregate over every match; on a full page the LIMIT's cut
+        short = n_match <= self.batch_max_rows
+        page = filtered if short else filtered.orderBy(*order).limit(self.batch_max_rows)
+        # the batch is the matches up to the offset the page advanced
+        # to, so rows the source gains before the batch is consumed wait
+        # for the next poll.  A timestamp-only batch keeps every row at
+        # the boundary ts (see _advance), so it takes no LIMIT.
+        batch = filtered.filter(self._advance(page)).orderBy(*order)
+        if short or self.mode == "timestamp":
+            return batch
+        # the bound admits exactly the page's rows, so this LIMIT cuts
+        # none; it plans the sort as one top-K task, where a range sort
+        # would rerun its sampling job at every consumption of the batch
+        return batch.limit(self.batch_max_rows)
 
-        batch = filtered.orderBy(*order).limit(self.batch_max_rows)
+    def _advance(self, page: DataFrame):
+        """Advance the offset to the max ``(ts, inc)`` of ``page`` — one
+        tiny aggregate, the Spark analogue of per-row extractValues
+        (multi-ts: the effective ts is the COALESCE, exactly the
+        first-non-null extractOffsetTimestamp walk,
+        ``TimestampIncrementingCriteria.java:218-226``) — and return the
+        ``(ts, inc) <= offset`` bound.
 
-        if self.mode == "timestamp":
-            # timestamp-only offsets are NOT a total order: rows can
-            # share the boundary ts, and the next poll's predicate is
-            # strictly ``ts > last`` — advancing the offset into a
-            # timestamp whose rows were cut off by the LIMIT would skip
-            # them forever.  The reference never loses these because it
-            # chunks one open ResultSet; our analogue is to extend the
-            # batch to ALL rows at the boundary ts (may exceed
-            # batch_max_rows by the boundary group size).
-            boundary = batch.agg(F.max(crit.ts_expr())).collect()[0][0]
-            if boundary is None:
-                return batch  # empty
-            self.offset["timestamp"] = boundary.isoformat()
-            return filtered.filter(crit.ts_expr() <= F.lit(boundary))
-
-        # advance the offset to the max (ts, inc) of the batch — one
-        # tiny aggregate, the Spark analogue of per-row extractValues
-        # (multi-ts: the effective ts is the COALESCE, exactly the
-        # first-non-null extractOffsetTimestamp walk, :218-226)
-        agg_exprs = []
+        Timestamp-only offsets are NOT a total order: rows can share
+        the boundary ts, and the next poll's predicate is strictly
+        ``ts > last``, so the bound keeps ALL rows at the boundary ts
+        (the batch may exceed ``batch_max_rows`` by the boundary group
+        size).  The reference never loses these because it chunks one
+        open ResultSet."""
+        crit = self.criteria
+        cols = crit.order_exprs()
+        tail = page.agg(F.max(F.struct(*cols))).collect()[0][0]
         if crit.ts_cols:
-            agg_exprs.append(crit.ts_expr().alias("__ts"))
+            self.offset["timestamp"] = tail[0].isoformat()
         if self.inc_col:
-            agg_exprs.append(F.col(self.inc_col).alias("__inc"))
-        tail = batch.agg(
-            F.max(F.struct(*agg_exprs)).alias("m")
-        ).collect()[0]["m"]
-        if tail is not None:
-            vals = list(tail)
-            if crit.ts_cols:
-                self.offset["timestamp"] = vals.pop(0).isoformat()
-            if self.inc_col:
-                self.offset["incrementing"] = vals.pop(0)
-        return batch
+            self.offset["incrementing"] = tail[-1]
+        bound = cols[-1] <= F.lit(tail[-1])
+        if len(cols) == 2:  # lexicographic (ts, inc) <= (tail ts, tail inc)
+            ts, tail_ts = cols[0], F.lit(tail[0])
+            bound = (ts < tail_ts) | ((ts == tail_ts) & bound)
+        return bound
 
     def poll_all(self, df: DataFrame, max_polls: int = 10_000):
         """Drain the table: yield batches until exhausted — the

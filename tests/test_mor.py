@@ -105,33 +105,20 @@ def test_schema_evolution_with_segments(spark, tmp_path):
 
 
 def test_union_write_commit_dir_layout(spark, tmp_path):
-    """The CdcApplier writes every table's segment in one job; each
-    table's slice lands in its own data/commit-<id>/ (one id shared by
-    the tables), and the warehouse holds no shared commit dir."""
-    from kafka_connect_jdbc_flatten_spark.operators.merge import CdcApplier
-    from kafka_connect_jdbc_flatten_spark.plans import compile_flatten_plan
-    from kafka_connect_jdbc_flatten_spark.sources.changelog import (
-        CHANGELOG_SCHEMA,
-        TRANSCRIPT_KEY_SCHEMA,
-        TRANSCRIPT_VALUE_SCHEMA,
-        transcript_flatten_config,
-    )
+    """The CdcApplier writes every table's segment in one job.  A
+    trickle batch over two tables lands as ONE parquet file per table,
+    directly in the table's own data/commit-<id>/ (one id shared by the
+    tables), and the manifest lists that file under exactly the
+    __bucket values it holds; the warehouse holds no shared commit
+    dir."""
+    import pyarrow.parquet as pq
 
-    plan = compile_flatten_plan(
-        TRANSCRIPT_KEY_SCHEMA,
-        TRANSCRIPT_VALUE_SCHEMA,
-        transcript_flatten_config(),
-        value_record_name="Conversation",
-        key_record_name="ConversationKey",
-    )
+    from kafka_connect_jdbc_flatten_spark.lake.table import BUCKET_COL
+    from kafka_connect_jdbc_flatten_spark.sources.changelog import CHANGELOG_SCHEMA
+
     wh = str(tmp_path / "wh")
-    ap = CdcApplier(spark, wh, plan, n_buckets=4)
-    rows = [
-        (
-            "transcripts", 0, 1, TS, "CreateTime", ("c1",), None,
-            ("c1", [(0, "u", "hi", "", TS)]), "c", 1, TS,
-        )
-    ]
+    ap = _transcript_applier(spark, wh)
+    rows = [_envelope(f"c{i}", ["hi", "yo"], "c", i) for i in range(8)]
     stats = ap.apply_batch(
         spark.createDataFrame(rows, CHANGELOG_SCHEMA), batch_id=0
     )
@@ -142,16 +129,74 @@ def test_union_write_commit_dir_layout(spark, tmp_path):
         (commit,) = os.listdir(data)  # no staging dir left behind
         assert commit.startswith("commit-")
         commit_ids.add(commit)
+        (parquet,) = [
+            os.path.join(data, commit, f)
+            for f in os.listdir(os.path.join(data, commit))
+            if f.endswith(".parquet")
+        ]
         seg_files = table.manifest()["segments"][0]["files"]
-        for b, fl in seg_files.items():
-            for f in fl:
-                assert os.path.dirname(f) == os.path.join(
-                    data, commit, f"__bucket_p={b}"
-                )
-                assert os.path.exists(f)
+        assert all(fl == [parquet] for fl in seg_files.values()), seg_files
+        held = set(pq.read_table(parquet, columns=[BUCKET_COL])[BUCKET_COL].to_pylist())
+        assert {int(b) for b in seg_files} == held
+        assert len(held) > 1, name  # the one file spans several buckets
     assert len(commit_ids) == 1  # ONE write for both tables
     assert sorted(os.listdir(wh)) == sorted(ap.tables)
-    assert ap.read("transcripts_conversation_turns").count() == 1
+    assert ap.read("transcripts_conversation").count() == 8
+    assert ap.read("transcripts_conversation_turns").count() == 16
+
+
+def test_bucket_read_of_multi_bucket_segment_file(spark, tmp_path):
+    """A segment file holding several buckets is listed under each of
+    them; read(buckets=[b]) must return exactly bucket b's reconciled
+    rows (the __bucket filter), for every b, over base files and
+    segments alike."""
+    from kafka_connect_jdbc_flatten_spark.lake.table import BUCKET_COL
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["k"], n_buckets=4)
+    t.merge(mk(spark, [(i, f"a{i}", 1) for i in range(12)]), mode="lww", batch_id=0)
+    t.compact()
+    t.merge(mk(spark, [(i, f"b{i}", 2) for i in range(0, 20, 2)]), mode="lww", batch_id=1)
+    (seg,) = t.manifest()["segments"]
+    files = {f for fl in seg["files"].values() for f in fl}
+    assert len(files) == 1 and len(seg["files"]) > 1, seg["files"]
+    whole = t.read()
+    assert whole.count() == 16  # the file is read once, not once per bucket
+    for b in range(4):
+        got = sorted(map(tuple, t.read(buckets=[b]).collect()))
+        want = sorted(map(tuple, whole.filter(F.col(BUCKET_COL) == b).collect()))
+        assert got == want, b
+
+
+def test_failed_write_removes_staging_dir(spark, tmp_path):
+    """A write job that fails at run time (an ANSI cast error in one
+    part's rows) leaves no staging dir behind and moves no manifest.
+    The parts' ``v`` types differ, so they are two write jobs: the
+    first fills the staging dir, the second fails."""
+    import glob
+
+    import pytest
+
+    from kafka_connect_jdbc_flatten_spark.lake.table import SegmentPart, write_segments
+
+    long_v = T.StructType(
+        [f if f.name != "v" else T.StructField("v", T.LongType(), True) for f in SCHEMA]
+    )
+    good = LakeTable.create(spark, str(tmp_path / "good"), SCHEMA, ["k"], n_buckets=4)
+    bad = LakeTable.create(spark, str(tmp_path / "bad"), long_v, ["k"], n_buckets=4)
+    versions = [good._current_version(), bad._current_version()]
+    # the last row's key is "x": the cast fails inside the second job
+    keys = F.when(F.col("id") == 5, F.lit("x")).otherwise(F.col("id").cast("string"))
+    bad_batch = spark.range(6).select(
+        keys.cast("long").alias("k"), F.col("id").alias("v"), F.col("id").alias(SEQ_COL)
+    )
+    parts = [
+        SegmentPart(good, good.segment_rows(mk(spark, [(1, "a", 1)]), ["k"]), "lww", ["k"], "w"),
+        SegmentPart(bad, bad.segment_rows(bad_batch, ["k"]), "lww", ["k"], "w"),
+    ]
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        write_segments(parts, batch_id=0)
+    assert not glob.glob(str(tmp_path / "**" / "staging-*"), recursive=True)
+    assert [good._current_version(), bad._current_version()] == versions
 
 
 def test_crash_between_table_commits_heals_on_replay(spark, tmp_path):

@@ -129,6 +129,42 @@ def test_poller_timestamp_mode_never_skips_boundary_ts_rows(spark):
     assert len(seen) == len(set(seen))
 
 
+@pytest.mark.parametrize(
+    "mode,page",
+    [("timestamp+incrementing", 10), ("timestamp+incrementing", 4),
+     ("incrementing", 10), ("timestamp", 4)],
+)
+def test_poller_batch_excludes_rows_appended_after_poll(spark, tmp_path, mode, page):
+    """A batch ends at the offset its poll advanced to: rows the source
+    gains after poll() returns, but before the batch is consumed, are
+    not in it, and the next poll returns them exactly once.  The source
+    re-reads a file on every evaluation, like a live table."""
+    import json
+
+    src = str(tmp_path / "src.jsonl")
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def append(ids):
+        with open(src, "a") as f:
+            f.writelines(json.dumps(i) + "\n" for i in ids)
+
+    def rows(_):
+        with open(src) as f:
+            return [(i, t0 + datetime.timedelta(minutes=i)) for i in map(json.loads, f)]
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([0], 1).flatMap(rows), "id long, ts timestamp"
+    )
+    append(range(6))
+    p = TablePoller(mode=mode, ts_col="ts", inc_col="id", batch_max_rows=page)
+    batch = p.poll(df)
+    append(range(6, 9))
+    got = [r.id for r in batch.collect()]
+    assert got == list(range(min(page, 6)))
+    rest = [r.id for b in p.poll_all(df) for r in b.collect()]
+    assert rest == list(range(len(got), 9))
+
+
 def test_poller_delay_guard_active_without_end_ts(spark, events):
     """timestamp_delay_ms must bound by current time even when the
     caller passes no end_ts (the reference always bounds by
